@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -12,16 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
 
     // Median of 3 timed iterations per query: this host shows multi-
@@ -67,14 +56,25 @@ object Bench {
         (steal, total - idle, iowait, total)
       } catch { case _: Throwable => (-1L, -1L, -1L, -1L) }
 
+    // Every failure is named on stderr and kept (first one per label)
+    // for the full line: a crashing query reads -1 and drops out of
+    // `total`, so an unnamed failure would read as a faster suite.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def fail(label: String, e: Throwable): Unit = {
+      val head = s"${e.getClass.getName}: " +
+        Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("").take(200)
+      System.err.println(s"[bench] $label failed: $head")
+      if (!failed.contains(label)) failed(label) = head
+    }
+
     // One measured iteration: (seconds, host steal seconds during it,
     // host busy fraction, host iowait fraction). Telemetry is -1 when
     // /proc/stat is unavailable or the query errored.
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Double, Double) = {
+    def once(q: QuerySpec): (Double, Double, Double, Double) = {
       val (s0, b0, w0, t0ticks) = cpuTicks()
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return (-1.0, -1.0, -1.0, -1.0) }
+      try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => fail(q.name, e); return (-1.0, -1.0, -1.0, -1.0) }
       val sec = (System.nanoTime() - t0) / 1e9
       val (s1, b1, w1, t1ticks) = cpuTicks()
       if (s0 < 0 || s1 < 0 || t1ticks <= t0ticks) (sec, -1.0, -1.0, -1.0)
@@ -82,18 +82,10 @@ object Bench {
         (b1 - b0).toDouble / (t1ticks - t0ticks),
         (w1 - w0).toDouble / (t1ticks - t0ticks))
     }
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-            n: Int): Seq[(Double, Double, Double, Double)] =
-      (1 to n).map(_ => once(fn))
     def median(xs: Seq[Double]): Double = {
       val ok = xs.filter(_ >= 0)
       if (ok.isEmpty) -1.0 else ok.sorted.apply((ok.size - 1) / 2)
     }
-
-    // Optional focus list (comma-separated name substrings) for
-    // adjudicating a single query's spread without its neighbors.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
 
     // Bench-only extra: the kernel encode at a REALISTIC ranks-map
     // size. The driver corpus's 31-word vocabulary saturates training
@@ -105,7 +97,7 @@ object Bench {
     // artifact, like every tokenizer build — ~90 rounds, reported as
     // its own field) and skipped entirely when a focus list excludes
     // the x-line; the x-line itself measures encode only.
-    val wantFull = only.forall(_.exists("x90_bpe_encode_fullvocab".contains))
+    val wantFull = SparkEntry.selected("x90_bpe_encode_fullvocab")
     val tBpe0 = System.nanoTime()
     val fullMerges =
       if (!wantFull) Seq.empty
@@ -116,73 +108,28 @@ object Bench {
         real ++ pad
       }
     val bpeTrainSec = if (wantFull) (System.nanoTime() - tBpe0) / 1e9 else -1.0
-    val extra: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
+    // Bench-only: no oracle, never in the registry.
+    val extra =
       if (!wantFull) Seq.empty
-      else Seq(
-        "x90_bpe_encode_fullvocab" -> ((s: SparkSession, d: String) => {
-          import org.apache.spark.sql.functions._
-          val toks = graft.functions.TextFunctions.bpeEncode(col("text"), fullMerges)
-          graft.Tables.t(s, d, "documents").select(col("doc_id"),
-            size(toks).cast("long").as("n_tokens"),
-            array_join(toks, " ").as("toks"))
-        }))
+      else Seq(QuerySpec("x90_bpe_encode_fullvocab", (s, d) => {
+        import org.apache.spark.sql.functions._
+        val toks = graft.functions.TextFunctions.bpeEncode(col("text"), fullMerges)
+        graft.Tables.t(s, d, "documents").select(col("doc_id"),
+          size(toks).cast("long").as("n_tokens"),
+          array_join(toks, " ").as("toks"))
+      }, oracle = ""))
 
-    // Write-artifact queries (per-call file/table writes: shard
-    // writers, sealed append/repair, saved-tokenizer/codebook/index
-    // lifecycles, media stores). They run as a SECOND phase after
+    // Write-artifact queries (`writes`: per-call file/table writes —
+    // shard writers, sealed append/repair, saved-tokenizer/codebook/
+    // index lifecycles, media stores) run as a SECOND phase after
     // every compute query has measured: their disk churn (page-cache
     // eviction, writeback) was the leading confound in round-over-
     // round compute readings (the r10 q152/q138 in-registry rises
     // adjudicated to exactly this), so the compute family now
     // measures before the churn starts. Within each phase the order
     // stays alphabetical.
-    val writeArtifact = Set(
-      "q93_pq_encode_incremental", "q120_bpe_encode_saved",
-      "q139_shard_manifest", "q141_ivf_rebuild", "q143_curation_v5",
-      "q144_shards_incremental", "q167_repair_manifest",
-      "q168_sealed_manifest", "q169_sealed_repair", "q177_sealed_append",
-      "q181_unigram_saved", "q200_video_keep_one_store",
-      "q201_audio_keep_one_store", "q205_media_store_incr",
-      "q206_ivf2_saved", "q227_image_keep_one_store",
-      "q228_kmv_stream", "q233_cms_stream", "q243_hist_stream",
-      "q254_scd2_stream", "q269_hll_stream", "q272_rollup_rewrite",
-      "q273_rollup_incremental", "q279_rollup_delete",
-      "q288_cdc_stream", "q296_rollup_avg", "q298_dpp_join",
-      "q299_contract_stream", "q306_bm25_stream",
-      "q312_sealed_delete", "q315_rollup_filtered",
-      "q316_rollup_distinct", "q332_jsonl_export", "q333_jsonl_append",
-      "q334_merge_into", "q335_merge_chain", "q338_jsonl_import",
-      "q339_store_compact", "q340_sft_stream", "q343_schema_evolution",
-      "q346_sft_stream_bucketed", "q347_sft_export",
-      "q349_merge_changelog", "q352_time_travel", "q353_version_vacuum",
-      // r13/r14 store- and artifact-writing families, reclassified
-      // into the write phase under the same hygiene rule they were
-      // carved out for (their churn was landing mid-compute-phase
-      // because the set predated them)
-      "q354_time_travel_asof", "q355_versioned_changelog",
-      "q356_trainer_artifact", "q357_manifest_checkpoint",
-      "q360_version_diff", "q361_versioned_stream",
-      "q362_versioned_evolution", "q363_merge_quarantine",
-      "q364_cdf_replicate", "q365_merge_evolution",
-      "q367_sealed_export_incr", "q368_point_lookup",
-      "q369_lookup_versioned", "q370_concurrent_merge",
-      "q371_quarantine_replay", "q372_sealed_stream",
-      "q373_version_restore", "q374_branch",
-      "q375_stats_skipping", "q376_branch_diff",
-      "q377_branch_merge_back", "q378_ivm_partials",
-      "q379_cdf_subscriber", "q380_stats_compact",
-      "q381_stats_expire", "q382_incr_retokenize",
-      "q383_stats_stream", "q384_branch_promote",
-      "q385_vacuum_branch_safe", "q386_asof_join_versioned",
-      "q387_stats_range_multi", "q388_store_history",
-      "q389_vrange_skipping", "q390_branch_rebase",
-      "q391_versioned_optimize", "q392_vrange_multi",
-      "q393_sealed_compact", "q394_vacuum_transitive",
-      "q395_rowgroup_range", "q396_bloom_lookup",
-      "q397_bloom_incremental")
-    def selected = (SparkEntry.queries.toSeq ++ extra)
-      .sortBy { case (name, _) => (writeArtifact.contains(name), name) }
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+    val selected = (SparkEntry.registry.filter(q => SparkEntry.selected(q.name)) ++ extra)
+      .sortBy(q => (q.writes, q.name))
 
     // Warm up every COMPUTE query once at the smallest SF: whole-stage
     // codegen compilation (janino) dominates first runs by seconds;
@@ -195,17 +142,14 @@ object Bench {
     // codegen compile, which is honest for a family whose numbers
     // are adjudicated with focused runs, never read off the suite.
     val tWarm0 = System.nanoTime()
-    selected.foreach { case (name, fn) =>
-      if (!writeArtifact.contains(name))
-        try fn(spark, "/root/testdata/sf0.001")
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+    selected.filterNot(_.writes).foreach { q =>
+      try q.run(spark, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => fail(s"warmup/${q.name}", e) }
     }
     val warmupSec = (System.nanoTime() - tWarm0) / 1e9
     // Drop warmup-SF cached intermediates so measurement starts clean.
-    graft.operators.TextPipelineQueries.clearCache(spark)
-    graft.multimodal.MultimodalQueries.clearCache(spark)
-    graft.operators.BpeQueries.clearCache()
+    SparkEntry.clearCaches(spark)
 
     // One-time shared-intermediate builds (shingle/signature tables,
     // CC labels, IVF index) timed as their OWN line item: per-query
@@ -216,7 +160,7 @@ object Bench {
     try {
       graft.operators.TextPipelineQueries.warmCaches(spark, sfDir)
       graft.multimodal.MultimodalQueries.warmCaches(spark, sfDir)
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => fail("cache_build", e) }
     val cacheBuild = (System.nanoTime() - tCache0) / 1e9
     val (cs1, _, _, _) = cpuTicks()
     val cacheSteal = if (cs0 < 0 || cs1 < 0) -1.0 else (cs1 - cs0) / 100.0
@@ -247,9 +191,8 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     })
 
-    val results = selected.map { case (name, fn) =>
-      name -> run(fn,
-        if (writeArtifact.contains(name)) writeIters else iters)
+    val results = selected.map { q =>
+      q.name -> (1 to (if (q.writes) writeIters else iters)).map(_ => once(q))
     }
     val qs = results.map { case (k, v) => "\"" + k + f"\":${median(v.map(_._1))}%.3f" }
       .mkString("{", ",", "}")
@@ -268,12 +211,11 @@ object Bench {
     val total = results.map(r => median(r._2.map(_._1))).filter(_ >= 0).sum
     // Phase split: compute-family and write-artifact totals reported
     // separately so round-over-round compute comparisons stay clean.
-    val writeTotal = results.filter(r => writeArtifact.contains(r._1))
+    val writeNames = selected.filter(_.writes).map(_.name).toSet
+    val writeTotal = results.filter(r => writeNames(r._1))
       .map(r => median(r._2.map(_._1))).filter(_ >= 0).sum
     val computeTotal = total - writeTotal
-    graft.operators.TextPipelineQueries.clearCache(spark)
-    graft.multimodal.MultimodalQueries.clearCache(spark)
-    graft.operators.BpeQueries.clearCache()
+    SparkEntry.clearCaches(spark)
     // Two renderings of the same run, split by audience. stdout gets
     // ONLY the compact medians line (the driver contract): rounds 5-8
     // all came back `parsed: null` because the driver's stdout-tail
@@ -283,7 +225,9 @@ object Bench {
     // adjudication reads it.
     val head = f""""metric":"total","value":$total%.3f,"unit":"sec","compute_sec":$computeTotal%.3f,"write_phase_sec":$writeTotal%.3f,"iters":$iters,"write_iters":$writeIters,"warmup_sec":$warmupSec%.3f,"canary_sec":$canarySec%.3f,"canary_io_sec":$canaryIoSec%.3f,"bpe_full_train_sec":$bpeTrainSec%.3f,"cache_build_sec":$cacheBuild%.3f,"cache_build_steal_sec":$cacheSteal%.2f,"queries":$qs"""
     val compact = s"""{$head,"sf":"$sfDir"}"""
-    val full = s"""{$head,"queries_iters":$spreads,"queries_steal_sec":$steals,"queries_busy_frac":$busys,"queries_iowait_frac":$iowaits,"sf":"$sfDir"}"""
+    val failedJson = failed.map { case (k, v) =>
+      s"${Verify.jsonString(k)}:${Verify.jsonString(v)}" }.mkString("{", ",", "}")
+    val full = s"""{$head,"n_failed":${failed.size},"failed":$failedJson,"queries_iters":$spreads,"queries_steal_sec":$steals,"queries_busy_frac":$busys,"queries_iowait_frac":$iowaits,"sf":"$sfDir"}"""
     // A ≤200-byte summary object with the headline numbers only, for
     // humans tailing the log — printed to STDERR before and after the
     // contract line so stdout carries EXACTLY one JSON line. (Rounds
@@ -293,7 +237,7 @@ object Bench {
     // lines without a `queries` map to stdout, which a last-JSON-line
     // parser could latch onto. Old per-query numbers are unchanged;
     // only the rendering destination moved.)
-    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","compute_sec":$computeTotal%.3f,"write_phase_sec":$writeTotal%.3f,"n_queries":${results.size},"iters":$iters,"write_iters":$writeIters,"warmup_sec":$warmupSec%.3f,"canary_sec":$canarySec%.3f,"canary_io_sec":$canaryIoSec%.3f,"sf":"$sfDir"}"""
+    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","compute_sec":$computeTotal%.3f,"write_phase_sec":$writeTotal%.3f,"n_queries":${results.size},"n_failed":${failed.size},"iters":$iters,"write_iters":$writeIters,"warmup_sec":$warmupSec%.3f,"canary_sec":$canarySec%.3f,"canary_io_sec":$canaryIoSec%.3f,"sf":"$sfDir"}"""
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json"))
     try java.nio.file.Files.write(outPath, (full + "\n").getBytes("UTF-8"))

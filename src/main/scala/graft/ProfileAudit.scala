@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Scratch per-job profiler main (not part of the driver contract —
-  * the measurement side of an optimization pass, like [[PlanAudit]]):
-  * runs the queries named in SPARK_GRAFT_PROFILE under the Bench
-  * session shape and prints every Spark job's wall seconds with its
+  * the measurement side of an optimization pass): runs the queries
+  * named in SPARK_GRAFT_ONLY under the Bench session and prints each
+  * one's formatted plan, then every Spark job's wall seconds with its
   * callsite, so a multi-action lifecycle query's cost can be
   * attributed line by line. Each query runs twice by default — the
   * first run carries codegen compilation, the second is steady state;
@@ -14,17 +13,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 object ProfileAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("profile-audit")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
@@ -70,17 +59,25 @@ object ProfileAudit {
                                exception: Exception): Unit = ()
       })
 
-    val names = sys.env.getOrElse("SPARK_GRAFT_PROFILE", "").split(",")
-      .map(_.trim).filter(_.nonEmpty)
+    val names = SparkEntry.only.getOrElse(Seq.empty)
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "2").toInt
     names.foreach { n =>
       (1 to reps).foreach { r =>
         done.clear()
         acts.clear()
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        // The plan is printed on run 1 and its time left out of the
+        // wall: the write below plans its own QueryExecution anyway.
+        val p0 = System.nanoTime()
+        if (r == 1) {
+          println(s"========== $n plan ==========")
+          println(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        }
+        val planNs = System.nanoTime() - p0
+        df.write.format("noop").mode("overwrite").save()
+        val wall = (System.nanoTime() - t0 - planNs) / 1e9
         Thread.sleep(300) // let the listener bus drain
         println(f"========== $n run $r: $wall%.2f s ==========")
         val rows = done.toArray(Array.empty[(Int, String, Double)])

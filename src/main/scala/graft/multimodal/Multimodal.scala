@@ -32,10 +32,6 @@ object Multimodal {
   case class FeatureRecord(media_id: Long, features: Array[Float])
   case class FrameRecord(media_id: Long, frame_idx: Int, frame: Array[Byte])
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("content", BinaryType)))
-
   /** Media codec. REAL pure-JVM decoders for PNG, BMP (24/32-bit
     * uncompressed) and binary PPM/PGM — header parse, pixel extract,
     * nearest-neighbor resize, re-encode — plus JPEG metadata (SOF

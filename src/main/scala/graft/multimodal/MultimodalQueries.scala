@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
@@ -15,8 +16,6 @@ import graft.Tables.t
   * shapes are what is being proven).
   */
 object MultimodalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** The muxed per-doc AVI corpus feeding q118: synthesized once per
     * (session, dir) and persisted, the [[graft.operators
@@ -170,8 +169,8 @@ object MultimodalQueries {
     }).toDF("media_id", "img_hash")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q40_multimodal_decode" -> ((s, d) => {
+  lazy val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q40_multimodal_decode", (s, d) => {
       import s.implicits._
       val media = t(s, d, "documents").select($"doc_id", $"text")
         .as[(Long, String)]
@@ -185,7 +184,14 @@ object MultimodalQueries {
           $"meta.height".cast("long").as("height"),
           $"meta.channels".cast("long").as("channels"),
           $"meta.nBytes".as("n_bytes"))
-    }),
+    },
+      // header = 4-byte magic + 2 x i32 dims + 1 channel byte = 13 bytes
+      """SELECT doc_id AS media_id,
+        | CAST(doc_id % 64 + 1 AS BIGINT) AS width,
+        | CAST(doc_id % 48 + 1 AS BIGINT) AS height,
+        | CAST(3 AS BIGINT) AS channels,
+        | CAST(13 + strlen(text) AS BIGINT) AS n_bytes
+        |FROM documents""".stripMargin),
     // The REAL WAV codec through the gate: constant-amplitude PCM16
     // clips synthesized from doc_id, encoded with Wav.encode on
     // executors, then decoded + feature-extracted by the distributed
@@ -193,7 +199,7 @@ object MultimodalQueries {
     // closed forms (rms = peak = amp/32768, duration = frames/8 ms at
     // 8 kHz), all in exact binary fractions — so encode → chunk walk →
     // sample decode → feature math is value-checked end-to-end.
-    "q58_audio_features" -> ((s, d) => {
+    QuerySpec("q58_audio_features", (s, d) => {
       import s.implicits._
       val media = t(s, d, "documents").select($"doc_id").as[Long]
         .map { id =>
@@ -205,7 +211,12 @@ object MultimodalQueries {
       Audio.extractFeatures(media)
         .select($"media_id", $"duration_ms",
           round($"rms", 6).as("rms"), round($"peak", 6).as("peak"))
-    }),
+    },
+      """SELECT doc_id AS media_id,
+        | CAST((400 + (doc_id % 5) * 80) // 8 AS BIGINT) AS duration_ms,
+        | round((doc_id % 8) * 4096 / 32768.0, 6) AS rms,
+        | round((doc_id % 8) * 4096 / 32768.0, 6) AS peak
+        |FROM documents""".stripMargin),
     // The REAL image codecs through the gate — the q58 pattern applied
     // to pixels: deterministic fills synthesized from doc_id, encoded
     // on executors with the real PPM writer (even ids) or the real PNG
@@ -214,7 +225,7 @@ object MultimodalQueries {
     // reduced to exact order-pinning scalars (Σv and Σi·v) that SQL
     // recomputes from the fill's closed form. Any byte the round trip
     // loses, reorders, or invents moves the sums.
-    "q60_image_roundtrip" -> ((s, d) => {
+    QuerySpec("q60_image_roundtrip", (s, d) => {
       import s.implicits._
       val media = t(s, d, "documents").select($"doc_id").as[Long]
         .map { id =>
@@ -238,7 +249,22 @@ object MultimodalQueries {
           m.format, px.length.toLong, sum, dot)
       }).toDF("media_id", "width", "height", "channels", "fmt",
         "n_px", "px_sum", "px_dot")
-    }),
+    },
+      """WITH dims AS (
+        |  SELECT doc_id, CAST(doc_id % 24 + 1 AS BIGINT) AS width,
+        |         CAST(doc_id % 16 + 1 AS BIGINT) AS height
+        |  FROM documents),
+        |px AS (
+        |  SELECT doc_id, width, height,
+        |         unnest(range(0, width*height*3)) AS i
+        |  FROM dims)
+        |SELECT doc_id AS media_id, width, height,
+        |  CAST(3 AS BIGINT) AS channels,
+        |  CASE WHEN doc_id % 2 = 0 THEN 'ppm' ELSE 'png' END AS fmt,
+        |  CAST(width*height*3 AS BIGINT) AS n_px,
+        |  CAST(sum((doc_id * 31 + i * 7) % 251) AS BIGINT) AS px_sum,
+        |  CAST(sum(i * ((doc_id * 31 + i * 7) % 251)) AS BIGINT) AS px_dot
+        |FROM px GROUP BY doc_id, width, height""".stripMargin),
     // Perceptual image dedup — dHash over DECODED pixels, riding the
     // real PNG codec end-to-end: docs share one of 7 visual classes
     // (fill and dims derived from doc_id % 7), every class member
@@ -248,21 +274,31 @@ object MultimodalQueries {
     // dedup artifact: (img_hash, n_docs, keep_id). The oracle
     // recomputes the hash bits from the fill's closed form — a decode
     // that flips ANY byte moves the hash and breaks the groups.
-    "q62_image_dhash_groups" -> ((s, d) =>
+    QuerySpec("q62_image_dhash_groups", (s, d) =>
       dhashedMedia(s, d).groupBy(col("img_hash"))
-        .agg(count(lit(1)).as("n_docs"), min(col("media_id")).as("keep_id"))),
+        .agg(count(lit(1)).as("n_docs"), min(col("media_id")).as("keep_id")),
+      """WITH cls AS (SELECT doc_id, doc_id % 7 AS c FROM documents),
+        |bits AS (SELECT doc_id, c, unnest(range(0, 48)) AS j FROM cls),
+        |h AS (SELECT doc_id,
+        |  CAST(sum(CASE WHEN (c*37 + j*11) % 241 > (c*37 + (j+1)*11) % 241
+        |           THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS img_hash
+        |  FROM bits GROUP BY doc_id)
+        |SELECT img_hash, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(min(doc_id) AS BIGINT) AS keep_id
+        |FROM h GROUP BY img_hash""".stripMargin),
     // The ACT on q62's detect, extending keep-one materialization
     // (q52) to the image modality: every media row with its group's
     // canonical keeper and its own verdict — the table the physical
     // delete/copy step consumes. Same decode, one extra
     // group-min join.
-    "q164_image_keep_one" -> ((s, d) => {
+    QuerySpec("q164_image_keep_one", (s, d) => {
       val hashed = dhashedMedia(s, d)
       hashed.join(hashed.groupBy(col("img_hash"))
           .agg(min(col("media_id")).as("keep_id")), Seq("img_hash"))
         .select(col("media_id"), col("img_hash"), col("keep_id"),
           (col("media_id") === col("keep_id")).as("is_keeper"))
-    }),
+    },
+      imageKeepOneSql),
     // Edge-silence trimming through the gate: clips built as
     // silence + tone + silence at exact 50 ms window multiples, so the
     // trimmed clip's duration and features have closed forms
@@ -270,7 +306,7 @@ object MultimodalQueries {
     // property is what makes this exactly predictable). Every 11th
     // doc is all-silence and must DROP from the output entirely — the
     // curation filter the operator exists for.
-    "q63_audio_trim" -> ((s, d) => {
+    QuerySpec("q63_audio_trim", (s, d) => {
       import s.implicits._
       val media = t(s, d, "documents").select($"doc_id").as[Long]
         .map { id =>
@@ -287,11 +323,16 @@ object MultimodalQueries {
         Audio.trimSilenceAll(media, windowMs = 50, threshold = 0.01))
         .select($"media_id", $"duration_ms",
           round($"rms", 6).as("rms"), round($"peak", 6).as("peak"))
-    }),
+    },
+      """SELECT doc_id AS media_id,
+        | CAST((2 + doc_id % 4) * 50 AS BIGINT) AS duration_ms,
+        | round((doc_id % 6 + 1) * 4096 / 32768.0, 6) AS rms,
+        | round((doc_id % 6 + 1) * 4096 / 32768.0, 6) AS peak
+        |FROM documents WHERE doc_id % 11 <> 0""".stripMargin),
     // Frame sampling for "video" payloads: fixed-size frames, every
     // 2nd kept — the flatMap shape and byte accounting are exactly
     // recomputable from the text length.
-    "q64_video_frames" -> ((s, d) => {
+    QuerySpec("q64_video_frames", (s, d) => {
       import s.implicits._
       val media = t(s, d, "documents").select($"doc_id", $"text")
         .as[(Long, String)]
@@ -302,7 +343,13 @@ object MultimodalQueries {
       Multimodal.sampleFrames(media, frameBytes = 32, stride = 2)
         .select($"media_id", $"frame_idx".cast("long").as("frame_idx"),
           length($"frame").cast("long").as("n_bytes"))
-    }),
+    },
+      """WITH f AS (SELECT doc_id, strlen(text) AS len,
+        |  unnest(range(0, CAST(ceil(strlen(text) / 32.0) AS BIGINT))) AS i
+        |  FROM documents)
+        |SELECT doc_id AS media_id, CAST(i AS BIGINT) AS frame_idx,
+        |  CAST(least(32, len - i * 32) AS BIGINT) AS n_bytes
+        |FROM f WHERE i % 2 = 0""".stripMargin),
     // REAL video end to end: per-doc MJPEG AVIs muxed on executors
     // from ImageIO-encoded JPEG frames (the JDK reference codec, the
     // JpegDecodeSpec anchor), demuxed by the RIFF walker, every
@@ -312,7 +359,7 @@ object MultimodalQueries {
     // only right when the Huffman+IDCT pipeline actually ran) —
     // while pixel VALUES, unpredictable in SQL for a lossy codec,
     // are cross-checked against ImageIO in MultimodalSpec.
-    "q118_video_mjpeg" -> ((s, d) => {
+    QuerySpec("q118_video_mjpeg", (s, d) => {
       import s.implicits._
       aviTab(s, d).as[Multimodal.MediaRecord].flatMap { r =>
         Avi.frames(r.content).zipWithIndex.collect {
@@ -323,27 +370,55 @@ object MultimodalQueries {
             (r.media_id, idx.toLong, w.toLong, h.toLong, px.length.toLong)
         }
       }.toDF("media_id", "frame_idx", "width", "height", "n_px")
-    }),
+    },
+      // n_px = decoded pixel-buffer length: right only when the RIFF
+      // walk found every frame AND the native JPEG decode produced a
+      // full w*h*3 interleaved buffer for each sampled one.
+      """WITH f AS (SELECT doc_id,
+        |  unnest(range(0, doc_id % 3 + 2)) AS i FROM documents)
+        |SELECT doc_id AS media_id, CAST(i AS BIGINT) AS frame_idx,
+        |  CAST(doc_id % 16 + 8 AS BIGINT) AS width,
+        |  CAST(doc_id % 12 + 8 AS BIGINT) AS height,
+        |  CAST((doc_id % 16 + 8) * (doc_id % 12 + 8) * 3 AS BIGINT) AS n_px
+        |FROM f WHERE i % 2 = 0""".stripMargin),
     // The per-frame perceptual signature table — demux (RIFF walk) +
     // real PNG pixel decode + dHash, the substrate of video dedup.
     // The oracle recomputes every hash bit from the fill's closed
     // form: a decode that drops, reorders, or perturbs ANY frame
     // byte moves some hash and fails the gate.
-    "q170_video_framesig" -> ((s, d) => {
+    QuerySpec("q170_video_framesig", (s, d) => {
       import s.implicits._
       VideoDedup.frameSignatures(pngAviTab(s, d).as[Multimodal.MediaRecord])
-    }),
+    },
+      // closed-form dHash per (class, frame-content): px[i] =
+      // (c*37 + fc*13 + i*11) % 241, bit j set iff px[j] > px[j+1]
+      """WITH v AS (SELECT doc_id, CAST(doc_id % 6 AS BIGINT) AS c FROM documents),
+        |fr AS (SELECT doc_id, c, unnest(range(0, c + 2 +
+        |         CASE WHEN doc_id % 31 = 0 THEN 1 ELSE 0 END)) AS fi FROM v),
+        |ff AS (SELECT doc_id, CAST(fi AS BIGINT) AS frame_idx,
+        |       CASE WHEN doc_id % 31 = 0 AND fi = c + 2 THEN 99 ELSE fi END AS fc,
+        |       c FROM fr),
+        |bits AS (SELECT doc_id, frame_idx, fc, c, unnest(range(0, 48)) AS j FROM ff)
+        |SELECT doc_id AS media_id, frame_idx,
+        |  CAST(sum(CASE WHEN (c*37 + fc*13 + j*11) % 241 >
+        |                     (c*37 + fc*13 + (j+1)*11) % 241
+        |           THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS fhash
+        |FROM bits GROUP BY doc_id, frame_idx""".stripMargin),
     // Video NEAR-dup groups — the q62/q164 detect+act contract for
     // the video modality: banded frame-hash candidates, exact-hamming
     // verify, hash-set containment (an extra outro frame still scores
     // 1.0), connected components, keep-one. The oracle rebuilds the
     // same candidate/verify/closure chain in SQL, so both the
     // grouping topology AND the keeper choice go through the gate.
-    "q171_video_neardup" -> ((s, d) => {
+    QuerySpec("q171_video_neardup", (s, d) => {
       import s.implicits._
       VideoDedup.nearDupGroups(
         VideoDedup.frameSignatures(pngAviTab(s, d).as[Multimodal.MediaRecord]))
-    }),
+    },
+      // the same banded-candidate / hamming-verify / containment /
+      // transitive-closure chain, engine for engine (q41's recursive
+      // reach pattern for the CC half)
+      videoNearDupSql),
     // The audio-dedup substrate through the gate: real WAV encode on
     // executors, RIFF walk + PCM decode, fixed 400-frame windows,
     // quantized (RMS, peak) hashes. Clips share one of 5 acoustic
@@ -351,22 +426,37 @@ object MultimodalQueries {
     // every window level an exact closed form) and every 41st doc
     // appends an outro segment — the audio fixture mirroring the
     // video one.
-    "q195_audio_window_sig" -> ((s, d) => {
+    QuerySpec("q195_audio_window_sig", (s, d) => {
       import s.implicits._
       AudioDedup.windowSignatures(audioDupTab(s, d))
-    }),
+    },
+      // closed-form window hashes: constant segments make
+      // rms = peak = m·4096/32768 = m/8 exact → hash = 8m·64 + 8m
+      """WITH v AS (SELECT doc_id, CAST(doc_id % 5 AS BIGINT) AS c FROM documents),
+        |f AS (SELECT doc_id, c, unnest(range(0, c % 3 + 3 +
+        |        CASE WHEN doc_id % 41 = 0 THEN 1 ELSE 0 END)) AS k FROM v),
+        |sg AS (SELECT doc_id, CAST(k AS BIGINT) AS frame_idx,
+        |       CASE WHEN doc_id % 41 = 0 AND k = c % 3 + 3 THEN 99 ELSE k END
+        |         AS seg, c FROM f)
+        |SELECT doc_id AS media_id, frame_idx,
+        |  CAST(520 * ((c*7 + seg*11) % 8) AS BIGINT) AS fhash
+        |FROM sg""".stripMargin),
     // Audio NEAR-dup groups — the detect+act contract for the last
     // modality without one, run on the SAME modality-agnostic
     // machinery as video (nBands=1/bandBits=12/hammingMax=0: one
     // exact band IS the small quantized hash, so candidates are
     // equal-window pairs only); hash-set containment still scores the
     // outro-extended clip 1.0 against its class.
-    "q196_audio_neardup" -> ((s, d) => {
+    QuerySpec("q196_audio_neardup", (s, d) => {
       import s.implicits._
       VideoDedup.nearDupGroups(
         AudioDedup.windowSignatures(audioDupTab(s, d)),
         bandBits = 12, nBands = 1, hammingMax = 0)
-    }),
+    },
+      // equal-hash candidates (one exact band IS the small hash),
+      // containment, recursive closure — the video chain over the
+      // audio substrate
+      audioNearDupSql),
     // INCREMENTAL video dedup — the q57/q59/q130 contract for the
     // newest modality: the first 80% of videos are the standing
     // corpus (signature classes + component labels over their
@@ -377,27 +467,31 @@ object MultimodalQueries {
     // from-scratch grouping verbatim — q171's oracle applies
     // UNCHANGED (the invariant pattern). Append-only ids mean a
     // signature class's representative (its min id) never moves.
-    "q189_video_incremental" -> ((s, d) => {
+    QuerySpec("q189_video_incremental", (s, d) => {
       import s.implicits._
       val sigs = VideoDedup.frameSignatures(
           pngAviTab(s, d).as[Multimodal.MediaRecord])
         .localCheckpoint(true)
       val maxId = sigs.agg(max(col("media_id"))).head().getLong(0)
       VideoDedup.incrementalGroups(sigs, thresh = maxId * 4 / 5)
-    }),
+    },
+      // the incremental fold must land at the from-scratch grouping —
+      // the invariant oracle applies verbatim
+      videoNearDupSql),
     // The cross-modality reuse made concrete: the SAME incremental
     // fold (signature classes, batch×all banding, delta CC) over the
     // AUDIO substrate — one line of modality-specific code (the
     // window-hash extractor), everything else shared. Invariant
     // oracle: q196's from-scratch grouping verbatim.
-    "q197_audio_incremental" -> ((s, d) => {
+    QuerySpec("q197_audio_incremental", (s, d) => {
       import s.implicits._
       val sigs = AudioDedup.windowSignatures(audioDupTab(s, d))
         .localCheckpoint(true)
       val maxId = sigs.agg(max(col("media_id"))).head().getLong(0)
       VideoDedup.incrementalGroups(sigs, thresh = maxId * 4 / 5,
         bandBits = 12, nBands = 1, hammingMax = 0)
-    }),
+    },
+      audioNearDupSql),
     // Keep-one MATERIALIZATION for video — the modality's q143-style
     // file artifact: the whole corpus lands in a bucketed media store,
     // the q171 verdict's non-keepers are physically deleted
@@ -409,7 +503,7 @@ object MultimodalQueries {
     // one it wrongly removed, breaks the hash. Byte identity and
     // mtime-pinning of untouched buckets are spec-pinned
     // (MultimodalSpec), since parquet bytes are not SQL-derivable.
-    "q200_video_keep_one_store" -> ((s, d) => {
+    QuerySpec("q200_video_keep_one_store", (s, d) => {
       import s.implicits._
       val media = pngAviTab(s, d)
       val groups = VideoDedup.nearDupGroups(
@@ -420,12 +514,21 @@ object MultimodalQueries {
       MediaStore.applyKeepOne(s, path,
         groups.filter(!col("is_keeper")).select(col("media_id")), "media_id")
       MediaStore.manifest(s.read.parquet(path), "media_id")
-    }),
+    },
+      // the store after the physical delete holds exactly the keepers:
+      // the oracle re-derives the verdict and the per-bucket survivor
+      // structure; computing the Spark side from read-back files is
+      // what proves the delete landed (and spared the right rows)
+      s"""SELECT CAST(media_id % 8 AS BIGINT) AS bucket,
+         |  CAST(count(*) AS BIGINT) AS n_media,
+         |  bit_xor(('0x' || substr(md5(CAST(media_id AS VARCHAR)), 1, 15))
+         |    ::UBIGINT::BIGINT) AS ids_digest
+         |FROM ($videoNearDupSql) g WHERE is_keeper GROUP BY 1""".stripMargin, writes = true),
     // The IMAGE act tier — q164's exact-dhash verdict driving the
     // same MediaStore machinery, completing the keep-one
     // materialization across all three modalities (image q227,
     // video q200, audio q201) with one shared store implementation.
-    "q227_image_keep_one_store" -> ((s, d) => {
+    QuerySpec("q227_image_keep_one_store", (s, d) => {
       val media = pngTab(s, d).toDF()
       val hashed = dhashedMedia(s, d)
       val nonKeepers = hashed.join(
@@ -438,11 +541,18 @@ object MultimodalQueries {
       MediaStore.writeAll(media, "media_id", path, buckets = 8)
       MediaStore.applyKeepOne(s, path, nonKeepers, "media_id")
       MediaStore.manifest(s.read.parquet(path), "media_id")
-    }),
+    },
+      // surviving image store manifest — keepers of q164's verdict,
+      // bucketed and digested exactly like the video/audio stores
+      s"""SELECT CAST(media_id % 8 AS BIGINT) AS bucket,
+         |  CAST(count(*) AS BIGINT) AS n_media,
+         |  bit_xor(('0x' || substr(md5(CAST(media_id AS VARCHAR)), 1, 15))
+         |    ::UBIGINT::BIGINT) AS ids_digest
+         |FROM ($imageKeepOneSql) g WHERE is_keeper GROUP BY 1""".stripMargin, writes = true),
     // The same act tier over the AUDIO verdict — one call per
     // modality into the shared store machinery, mirroring how the
     // detect tier shares VideoDedup.nearDupGroups.
-    "q201_audio_keep_one_store" -> ((s, d) => {
+    QuerySpec("q201_audio_keep_one_store", (s, d) => {
       import s.implicits._
       val media = audioDupTab(s, d).toDF()
         .localCheckpoint(true) // fixture built per call; freeze once
@@ -455,7 +565,12 @@ object MultimodalQueries {
       MediaStore.applyKeepOne(s, path,
         groups.filter(!col("is_keeper")).select(col("media_id")), "media_id")
       MediaStore.manifest(s.read.parquet(path), "media_id")
-    }),
+    },
+      s"""SELECT CAST(media_id % 8 AS BIGINT) AS bucket,
+         |  CAST(count(*) AS BIGINT) AS n_media,
+         |  bit_xor(('0x' || substr(md5(CAST(media_id AS VARCHAR)), 1, 15))
+         |    ::UBIGINT::BIGINT) AS ids_digest
+         |FROM ($audioNearDupSql) g WHERE is_keeper GROUP BY 1""".stripMargin, writes = true),
     // The INCREMENTAL store lifecycle — standing-state dedup and the
     // physical store maintained together, the full act loop an ingest
     // pipeline runs per batch: bootstrap (store + dedupState + delete)
@@ -467,7 +582,7 @@ object MultimodalQueries {
     // non-keeper set handles that: applyKeepOne flags only buckets
     // where a listed id is still physically present. Must equal the
     // from-scratch keep-one store — q200's oracle VERBATIM.
-    "q205_media_store_incr" -> ((s, d) => {
+    QuerySpec("q205_media_store_incr", (s, d) => {
       import s.implicits._
       val media = pngAviTab(s, d)
       val sigs = VideoDedup.frameSignatures(
@@ -491,7 +606,14 @@ object MultimodalQueries {
       MediaStore.applyKeepOne(s, path, VideoDedup.groupsFromState(st2)
         .filter(!col("is_keeper")).select(col("media_id")), "media_id")
       MediaStore.manifest(s.read.parquet(path), "media_id")
-    }))
+    },
+      // the incrementally-maintained store must land at the from-scratch
+      // keep-one store — the invariant oracle applies verbatim
+      s"""SELECT CAST(media_id % 8 AS BIGINT) AS bucket,
+         |  CAST(count(*) AS BIGINT) AS n_media,
+         |  bit_xor(('0x' || substr(md5(CAST(media_id AS VARCHAR)), 1, 15))
+         |    ::UBIGINT::BIGINT) AS ids_digest
+         |FROM ($videoNearDupSql) g WHERE is_keeper GROUP BY 1""".stripMargin, writes = true))
 
   /** Baseline JPEG via the JDK's ImageIO (java.desktop — present in
     * any full JDK, headless-safe), the same reference encoder the
@@ -508,144 +630,6 @@ object MultimodalQueries {
     ios.close(); w.dispose()
     bos.toByteArray
   }
-
-  val oracle: Map[String, String] = Map(
-    // header = 4-byte magic + 2 x i32 dims + 1 channel byte = 13 bytes
-    "q40_multimodal_decode" ->
-      """SELECT doc_id AS media_id,
-        | CAST(doc_id % 64 + 1 AS BIGINT) AS width,
-        | CAST(doc_id % 48 + 1 AS BIGINT) AS height,
-        | CAST(3 AS BIGINT) AS channels,
-        | CAST(13 + strlen(text) AS BIGINT) AS n_bytes
-        |FROM documents""".stripMargin,
-    "q58_audio_features" ->
-      """SELECT doc_id AS media_id,
-        | CAST((400 + (doc_id % 5) * 80) // 8 AS BIGINT) AS duration_ms,
-        | round((doc_id % 8) * 4096 / 32768.0, 6) AS rms,
-        | round((doc_id % 8) * 4096 / 32768.0, 6) AS peak
-        |FROM documents""".stripMargin,
-    "q60_image_roundtrip" ->
-      """WITH dims AS (
-        |  SELECT doc_id, CAST(doc_id % 24 + 1 AS BIGINT) AS width,
-        |         CAST(doc_id % 16 + 1 AS BIGINT) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, width, height,
-        |         unnest(range(0, width*height*3)) AS i
-        |  FROM dims)
-        |SELECT doc_id AS media_id, width, height,
-        |  CAST(3 AS BIGINT) AS channels,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'ppm' ELSE 'png' END AS fmt,
-        |  CAST(width*height*3 AS BIGINT) AS n_px,
-        |  CAST(sum((doc_id * 31 + i * 7) % 251) AS BIGINT) AS px_sum,
-        |  CAST(sum(i * ((doc_id * 31 + i * 7) % 251)) AS BIGINT) AS px_dot
-        |FROM px GROUP BY doc_id, width, height""".stripMargin,
-    "q62_image_dhash_groups" ->
-      """WITH cls AS (SELECT doc_id, doc_id % 7 AS c FROM documents),
-        |bits AS (SELECT doc_id, c, unnest(range(0, 48)) AS j FROM cls),
-        |h AS (SELECT doc_id,
-        |  CAST(sum(CASE WHEN (c*37 + j*11) % 241 > (c*37 + (j+1)*11) % 241
-        |           THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS img_hash
-        |  FROM bits GROUP BY doc_id)
-        |SELECT img_hash, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(min(doc_id) AS BIGINT) AS keep_id
-        |FROM h GROUP BY img_hash""".stripMargin,
-    "q164_image_keep_one" -> imageKeepOneSql,
-    // surviving image store manifest — keepers of q164's verdict,
-    // bucketed and digested exactly like the video/audio stores
-    "q227_image_keep_one_store" ->
-      s"""SELECT CAST(media_id % 8 AS BIGINT) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n_media,
-         |  bit_xor(('0x' || substr(md5(CAST(media_id AS VARCHAR)), 1, 15))
-         |    ::UBIGINT::BIGINT) AS ids_digest
-         |FROM ($imageKeepOneSql) g WHERE is_keeper GROUP BY 1""".stripMargin,
-    "q63_audio_trim" ->
-      """SELECT doc_id AS media_id,
-        | CAST((2 + doc_id % 4) * 50 AS BIGINT) AS duration_ms,
-        | round((doc_id % 6 + 1) * 4096 / 32768.0, 6) AS rms,
-        | round((doc_id % 6 + 1) * 4096 / 32768.0, 6) AS peak
-        |FROM documents WHERE doc_id % 11 <> 0""".stripMargin,
-    "q64_video_frames" ->
-      """WITH f AS (SELECT doc_id, strlen(text) AS len,
-        |  unnest(range(0, CAST(ceil(strlen(text) / 32.0) AS BIGINT))) AS i
-        |  FROM documents)
-        |SELECT doc_id AS media_id, CAST(i AS BIGINT) AS frame_idx,
-        |  CAST(least(32, len - i * 32) AS BIGINT) AS n_bytes
-        |FROM f WHERE i % 2 = 0""".stripMargin,
-    // closed-form dHash per (class, frame-content): px[i] =
-    // (c*37 + fc*13 + i*11) % 241, bit j set iff px[j] > px[j+1]
-    "q170_video_framesig" ->
-      """WITH v AS (SELECT doc_id, CAST(doc_id % 6 AS BIGINT) AS c FROM documents),
-        |fr AS (SELECT doc_id, c, unnest(range(0, c + 2 +
-        |         CASE WHEN doc_id % 31 = 0 THEN 1 ELSE 0 END)) AS fi FROM v),
-        |ff AS (SELECT doc_id, CAST(fi AS BIGINT) AS frame_idx,
-        |       CASE WHEN doc_id % 31 = 0 AND fi = c + 2 THEN 99 ELSE fi END AS fc,
-        |       c FROM fr),
-        |bits AS (SELECT doc_id, frame_idx, fc, c, unnest(range(0, 48)) AS j FROM ff)
-        |SELECT doc_id AS media_id, frame_idx,
-        |  CAST(sum(CASE WHEN (c*37 + fc*13 + j*11) % 241 >
-        |                     (c*37 + fc*13 + (j+1)*11) % 241
-        |           THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS fhash
-        |FROM bits GROUP BY doc_id, frame_idx""".stripMargin,
-    // closed-form window hashes: constant segments make
-    // rms = peak = m·4096/32768 = m/8 exact → hash = 8m·64 + 8m
-    "q195_audio_window_sig" ->
-      """WITH v AS (SELECT doc_id, CAST(doc_id % 5 AS BIGINT) AS c FROM documents),
-        |f AS (SELECT doc_id, c, unnest(range(0, c % 3 + 3 +
-        |        CASE WHEN doc_id % 41 = 0 THEN 1 ELSE 0 END)) AS k FROM v),
-        |sg AS (SELECT doc_id, CAST(k AS BIGINT) AS frame_idx,
-        |       CASE WHEN doc_id % 41 = 0 AND k = c % 3 + 3 THEN 99 ELSE k END
-        |         AS seg, c FROM f)
-        |SELECT doc_id AS media_id, frame_idx,
-        |  CAST(520 * ((c*7 + seg*11) % 8) AS BIGINT) AS fhash
-        |FROM sg""".stripMargin,
-    // equal-hash candidates (one exact band IS the small hash),
-    // containment, recursive closure — the video chain over the
-    // audio substrate
-    "q196_audio_neardup" -> audioNearDupSql,
-    // the same banded-candidate / hamming-verify / containment /
-    // transitive-closure chain, engine for engine (q41's recursive
-    // reach pattern for the CC half)
-    "q171_video_neardup" -> videoNearDupSql,
-    // the incremental fold must land at the from-scratch grouping —
-    // the invariant oracle applies verbatim
-    "q189_video_incremental" -> videoNearDupSql,
-    "q197_audio_incremental" -> audioNearDupSql,
-    // the store after the physical delete holds exactly the keepers:
-    // the oracle re-derives the verdict and the per-bucket survivor
-    // structure; computing the Spark side from read-back files is
-    // what proves the delete landed (and spared the right rows)
-    "q200_video_keep_one_store" ->
-      s"""SELECT CAST(media_id % 8 AS BIGINT) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n_media,
-         |  bit_xor(('0x' || substr(md5(CAST(media_id AS VARCHAR)), 1, 15))
-         |    ::UBIGINT::BIGINT) AS ids_digest
-         |FROM ($videoNearDupSql) g WHERE is_keeper GROUP BY 1""".stripMargin,
-    "q201_audio_keep_one_store" ->
-      s"""SELECT CAST(media_id % 8 AS BIGINT) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n_media,
-         |  bit_xor(('0x' || substr(md5(CAST(media_id AS VARCHAR)), 1, 15))
-         |    ::UBIGINT::BIGINT) AS ids_digest
-         |FROM ($audioNearDupSql) g WHERE is_keeper GROUP BY 1""".stripMargin,
-    // the incrementally-maintained store must land at the from-scratch
-    // keep-one store — the invariant oracle applies verbatim
-    "q205_media_store_incr" ->
-      s"""SELECT CAST(media_id % 8 AS BIGINT) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n_media,
-         |  bit_xor(('0x' || substr(md5(CAST(media_id AS VARCHAR)), 1, 15))
-         |    ::UBIGINT::BIGINT) AS ids_digest
-         |FROM ($videoNearDupSql) g WHERE is_keeper GROUP BY 1""".stripMargin,
-    // n_px = decoded pixel-buffer length: right only when the RIFF
-    // walk found every frame AND the native JPEG decode produced a
-    // full w*h*3 interleaved buffer for each sampled one.
-    "q118_video_mjpeg" ->
-      """WITH f AS (SELECT doc_id,
-        |  unnest(range(0, doc_id % 3 + 2)) AS i FROM documents)
-        |SELECT doc_id AS media_id, CAST(i AS BIGINT) AS frame_idx,
-        |  CAST(doc_id % 16 + 8 AS BIGINT) AS width,
-        |  CAST(doc_id % 12 + 8 AS BIGINT) AS height,
-        |  CAST((doc_id % 16 + 8) * (doc_id % 12 + 8) * 3 AS BIGINT) AS n_px
-        |FROM f WHERE i % 2 = 0""".stripMargin)
 
   private lazy val audioNearDupSql =
     """WITH RECURSIVE v AS (SELECT doc_id, CAST(doc_id % 5 AS BIGINT) AS c

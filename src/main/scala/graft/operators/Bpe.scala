@@ -199,15 +199,6 @@ object Bpe {
     merges.toSeq
   }
 
-  /** The learned merges as a frame: (rank, lhs, rhs). */
-  def mergeTable(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    learnMerges(df, textCol, numMerges).zipWithIndex
-      .map { case ((a, b), r) => (r.toLong, a, b) }
-      .toDF("rank", "lhs", "rhs")
-  }
-
   /** The TRUE BPE vocabulary: the id space a trainer consumes. Base
     * symbols (every initial symbol occurring in the type table,
     * sorted) take ids 0..k−1; merge OUTPUTS take k..k+numMerges−1 in

@@ -351,12 +351,14 @@ object Packing {
     require(minNew > maxOldId,
       s"appendShards is append-only: batch min id $minNew must follow " +
         s"existing max id $maxOldId (re-shard from scratch otherwise)")
-    // layout-then-join-back, kept DELIBERATELY (§3, strategy by
-    // measurement): the batch is micro-batch/cached-table sized, so
-    // the rank runs on narrow rows and the join-back broadcasts —
-    // packAttach's bucket window shuffles the payload an extra time
-    // and adjudicated 14-20% slower at sf0.1 on q144/q177
-    // (BENCH_ADJ_r17_touched vs BENCH_ADJ_r17_reverted)
+    // layout-then-join-back, kept: the batch is micro-batch/cached-
+    // table sized, so the rank runs on narrow rows and the join-back
+    // broadcasts — packAttach's bucket window shuffles the payload an
+    // extra time. One back-to-back single-sample A/B at sf0.1
+    // (BENCH_ADJ_r17_touched vs BENCH_ADJ_r17_reverted) read attach-
+    // in-place +2.6% on q144 and +4.8% on q177, inside that pair's
+    // noise band: queries with unchanged code moved up to +17.1%
+    // (q200), +10.3% (q333) and +11.0% (q347)
     val layout = packByBudget(batch.select(col(idCol), col(tokenCol)),
       idCol, tokenCol, budget, tokenOffset = oldTokens)
     val packed = layout
@@ -432,10 +434,9 @@ object Packing {
     require(minNew > maxOldId,
       s"appendSealedShards is append-only: batch min id $minNew must " +
         s"follow existing max id $maxOldId (re-shard from scratch otherwise)")
-    // rank-then-join-back, kept DELIBERATELY (§3, strategy by
-    // measurement): the batch is micro-batch sized, so the join-back
-    // broadcasts — prefixAttach's bucket window shuffles the payload
-    // an extra time and adjudicated slower at sf0.1 (see appendShards)
+    // rank-then-join-back, kept: the batch is micro-batch sized, so
+    // the join-back broadcasts — prefixAttach's bucket window shuffles
+    // the payload an extra time (A/B readings: see appendShards)
     val placed = prefixSums(batch.select(col(idCol), col(tokenCol)),
         idCol, tokenCol, oldTokens)
       .withColumn("shard_id", expr(s"__start div ${cap}L"))

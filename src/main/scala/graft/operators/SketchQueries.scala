@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
@@ -12,8 +13,6 @@ import graft.functions.TextFunctions.{shingles, tokens}
   * ESTIMATES (not just invariants) hash-match DuckDB exactly.
   */
 object SketchQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private def docs(s: SparkSession, d: String) = t(s, d, "documents")
 
@@ -67,7 +66,7 @@ object SketchQueries {
        |FROM est JOIN ex USING (source)""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
+  lazy val specs: Seq[QuerySpec] = Seq(
 
     // Per-source distinct-token cardinality by KMV sketch, plus the
     // '__all__' row built by MERGING the per-source sketches — the
@@ -76,7 +75,7 @@ object SketchQueries {
     // just per-row arithmetic. exact_distinct is the verification
     // column (a real vocabulary shuffle) a 100 TB deployment drops,
     // keeping only the k·sources-bounded sketch path.
-    "q211_kmv_distinct" -> ((s, d) => {
+    QuerySpec("q211_kmv_distinct", (s, d) => {
       val tok = docs(s, d)
         .select(col("source"), explode(tokens(col("text"))).as("w"))
       val hashed = tok.select(col("source"),
@@ -94,7 +93,8 @@ object SketchQueries {
       sk.join(exact, Seq("source"))
         .select(col("source"), col("exact_distinct"),
           Sketches.kmvEstimate(col("hs"), KmvK).as("kmv_est"))
-    }),
+    },
+      kmvSql),
 
     // Incremental KMV: standing per-source sketches over the old
     // corpus (doc_id % 5 != 0, the repo's batch convention) FOLDED
@@ -104,7 +104,7 @@ object SketchQueries {
     // the gate proves fold(old, batch) is indistinguishable from
     // from-scratch. exact_distinct stays the full-corpus verification
     // column a production fold drops.
-    "q224_kmv_incremental" -> ((s, d) => {
+    QuerySpec("q224_kmv_incremental", (s, d) => {
       val tok = docs(s, d).select(col("doc_id"), col("source"),
         explode(tokens(col("text"))).as("w"))
       def sk(part: DataFrame) = Sketches.kMinPerKey(
@@ -126,7 +126,8 @@ object SketchQueries {
       sk2.join(exact, Seq("source"))
         .select(col("source"), col("exact_distinct"),
           Sketches.kmvEstimate(col("hs"), KmvK).as("kmv_est"))
-    }),
+    },
+      kmvSql),
 
     // The STREAMING sketch fold (StreamingSketch.processBatch — the
     // foreachBatch sink's exact per-batch path) driven over 5
@@ -135,7 +136,7 @@ object SketchQueries {
     // table, and the final state must equal from-scratch q211 —
     // its oracle VERBATIM. The standing table never exceeds
     // |sources| rows of k longs regardless of streamed history.
-    "q228_kmv_stream" -> ((s, d) => {
+    QuerySpec("q228_kmv_stream", (s, d) => {
       val table = "graft_kmv_stream_" + math.abs(d.hashCode.toLong)
       s.sql(s"DROP TABLE IF EXISTS $table")
       val base = docs(s, d)
@@ -163,7 +164,8 @@ object SketchQueries {
       sk2.join(exact, Seq("source"))
         .select(col("source"), col("exact_distinct"),
           Sketches.kmvEstimate(col("hs"), KmvK).as("kmv_est"))
-    }),
+    },
+      kmvSql, writes = true),
 
     // DELETE-fold Count-Min: linearity cuts both ways — subtracting
     // the deleted slice's sketch cell-wise (zero cells dropped) must
@@ -174,7 +176,7 @@ object SketchQueries {
     // cost ∝ deleted slice + depth·width — the retained corpus is
     // never rescanned (contrast KMV/HLL, whose idempotent-max merges
     // are NOT invertible: erasure there means rebuild).
-    "q282_cms_delete" -> ((s, d) => {
+    QuerySpec("q282_cms_delete", (s, d) => {
       val tok = docs(s, d).select(col("doc_id"),
         explode(tokens(col("text"))).as("w"))
       def tf(p: DataFrame) = p.groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -187,7 +189,11 @@ object SketchQueries {
       Sketches.cmsLookup(folded, cands, "w", CmsDepth, CmsWidth)
         .select(col("w"), col("c").as("exact_c"), col("cms_est"),
           (col("cms_est") >= col("c")).as("over_ok"))
-    }),
+    },
+      // subtract-fold == from-scratch over survivors: q212's oracle on
+      // the filtered corpus (CTE shadows the view; main. disambiguates)
+      ("WITH documents AS (SELECT * FROM main.documents " +
+        "WHERE doc_id % 7 <> 3),\n" + cmsSql.stripPrefix("WITH "))),
 
     // Incremental Count-Min: the standing sketch over the old corpus
     // FOLDED with the batch's sketch by cell-wise sum — CMS is
@@ -196,7 +202,7 @@ object SketchQueries {
     // hitter report over the MERGED sketch against q212's oracle
     // VERBATIM (which sketches the whole corpus directly). Per-batch
     // work is the batch scan + a depth·width-bounded sum.
-    "q232_cms_incremental" -> ((s, d) => {
+    QuerySpec("q232_cms_incremental", (s, d) => {
       val tok = docs(s, d).select(col("doc_id"),
         explode(tokens(col("text"))).as("w"))
       def tf(p: DataFrame) = p.groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -210,7 +216,10 @@ object SketchQueries {
       Sketches.cmsLookup(merged, cands, "w", CmsDepth, CmsWidth)
         .select(col("w"), col("c").as("exact_c"), col("cms_est"),
           (col("cms_est") >= col("c")).as("over_ok"))
-    }),
+    },
+      // fold(old, batch) must be indistinguishable from from-scratch —
+      // CMS linearity through the gate, q212's oracle verbatim
+      cmsSql),
 
     // The STREAMING Count-Min fold (StreamingSketch.processCmsBatch)
     // over 5 batches PLUS a deliberate replay of batch 2. CMS merge
@@ -219,7 +228,7 @@ object SketchQueries {
     // (sentinel rows inside the sketch table: one commit carries
     // state + ledger) must skip the redelivery for the final state to
     // equal from-scratch q212 — its oracle VERBATIM.
-    "q233_cms_stream" -> ((s, d) => {
+    QuerySpec("q233_cms_stream", (s, d) => {
       val table = "graft_cms_stream_" + math.abs(d.hashCode.toLong)
       s.sql(s"DROP TABLE IF EXISTS $table")
       val base = docs(s, d)
@@ -239,13 +248,16 @@ object SketchQueries {
       Sketches.cmsLookup(sketch, cands, "w", CmsDepth, CmsWidth)
         .select(col("w"), col("c").as("exact_c"), col("cms_est"),
           (col("cms_est") >= col("c")).as("over_ok"))
-    }),
+    },
+      // and the streamed fold with a replayed batch skipped by the
+      // ledger must land on the same table — q212's oracle verbatim
+      cmsSql, writes = true),
 
     // Count-Min frequency sketch (4 × 256 cells — bounded state no
     // matter the vocabulary) probed with the exact top-20 tokens:
     // the estimate upper-bounds the true count ALWAYS (over_ok), and
     // both the estimates and the bound are cross-engine exact.
-    "q212_cms_heavy_hitters" -> ((s, d) => {
+    QuerySpec("q212_cms_heavy_hitters", (s, d) => {
       val tf = docs(s, d)
         .select(explode(tokens(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -254,7 +266,8 @@ object SketchQueries {
       Sketches.cmsLookup(sketch, cands, "w", CmsDepth, CmsWidth)
         .select(col("w"), col("c").as("exact_c"), col("cms_est"),
           (col("cms_est") >= col("c")).as("over_ok"))
-    }),
+    },
+      cmsSql),
 
     // Distribution DRIFT measured from sketches alone: old corpus vs
     // batch token distributions compared per CMS row as an L1 over
@@ -265,7 +278,7 @@ object SketchQueries {
     // (projection contraction), asserted per row against the exact
     // distance — drift monitoring with depth·width state, no vocab
     // shuffle.
-    "q229_cms_drift" -> ((s, d) => {
+    QuerySpec("q229_cms_drift", (s, d) => {
       val tok = docs(s, d).select(col("doc_id"),
         explode(tokens(col("text"))).as("w"))
       def tf(p: DataFrame) = p.groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -298,7 +311,37 @@ object SketchQueries {
         .select(col("row").cast("long").as("sk_row"), col("l1_sketch_x"),
           col("l1_exact_x"),
           (col("l1_sketch_x") <= col("l1_exact_x")).as("lower_bound_ok"))
-    }),
+    },
+      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+         |            FROM documents),
+         |otf AS (SELECT w, count(*)::BIGINT AS c FROM tok
+         |        WHERE doc_id % 5 <> 0 GROUP BY w),
+         |ntf AS (SELECT w, count(*)::BIGINT AS c FROM tok
+         |        WHERE doc_id % 5 = 0 GROUP BY w),
+         |no AS (SELECT CAST(sum(c) AS BIGINT) AS n_old FROM otf),
+         |nn AS (SELECT CAST(sum(c) AS BIGINT) AS n_new FROM ntf),
+         |rs AS (SELECT unnest(range($CmsDepth)) AS r),
+         |oc AS (SELECT r, ${h48Sql("r::VARCHAR || '|' || w")} % $CmsWidth
+         |         AS bucket, CAST(sum(c) AS BIGINT) AS co
+         |       FROM otf CROSS JOIN rs GROUP BY r, bucket),
+         |nc AS (SELECT r, ${h48Sql("r::VARCHAR || '|' || w")} % $CmsWidth
+         |         AS bucket, CAST(sum(c) AS BIGINT) AS cn
+         |       FROM ntf CROSS JOIN rs GROUP BY r, bucket),
+         |cells AS (SELECT coalesce(oc.r, nc.r) AS r,
+         |            coalesce(co, 0) AS co, coalesce(cn, 0) AS cn
+         |          FROM oc FULL OUTER JOIN nc
+         |            ON oc.r = nc.r AND oc.bucket = nc.bucket),
+         |l1 AS (SELECT r, CAST(sum(abs(co * n_new - cn * n_old)) AS BIGINT)
+         |         AS l1_sketch_x
+         |       FROM cells CROSS JOIN no CROSS JOIN nn GROUP BY r),
+         |exv AS (SELECT coalesce(otf.c, 0) AS co, coalesce(ntf.c, 0) AS cn
+         |        FROM otf FULL OUTER JOIN ntf ON otf.w = ntf.w),
+         |ex AS (SELECT CAST(sum(abs(co * n_new - cn * n_old)) AS BIGINT)
+         |         AS l1_exact_x
+         |       FROM exv CROSS JOIN no CROSS JOIN nn)
+         |SELECT CAST(l1.r AS BIGINT) AS sk_row, l1.l1_sketch_x, ex.l1_exact_x,
+         |       l1.l1_sketch_x <= ex.l1_exact_x AS lower_bound_ok
+         |FROM l1 CROSS JOIN ex""".stripMargin),
 
     // ROLLING-window distinct from daily sketches: per-day KMV
     // sketches of active users, each 7-day window answered by MERGING
@@ -307,7 +350,7 @@ object SketchQueries {
     // window from the same daily state). Exact windowed distinct is
     // the verification column. Reads the events table: day = epoch-ns
     // day index (the repo's timestamp convention).
-    "q263_kmv_rolling" -> ((s, d) => {
+    QuerySpec("q263_kmv_rolling", (s, d) => {
       val ev = graft.Tables.t(s, d, "events")
         .select(expr("ts div 86400000000000").as("day"), col("user_id"))
       val daily = Sketches.kMinPerKey(
@@ -331,7 +374,33 @@ object SketchQueries {
       rolled.join(exact, Seq("t"))
         .select(col("t").as("day"), col("exact_distinct"),
           Sketches.kmvEstimate(col("hs"), KmvK).as("kmv_est"))
-    }),
+    },
+      s"""WITH ev AS (SELECT DISTINCT epoch_ns(ts) // 86400000000000 AS day,
+         |              user_id FROM events),
+         |hs AS (SELECT DISTINCT day,
+         |         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT
+         |           AS h FROM ev),
+         |sk AS (SELECT day, h FROM (
+         |         SELECT day, h, row_number() OVER (PARTITION BY day
+         |           ORDER BY h) AS rk FROM hs) t WHERE rk <= $KmvK),
+         |days AS (SELECT DISTINCT day AS t FROM ev),
+         |win AS (SELECT DISTINCT days.t, sk.h
+         |        FROM days JOIN sk ON sk.day BETWEEN days.t - 6 AND days.t),
+         |wr AS (SELECT t, h, row_number() OVER (PARTITION BY t
+         |         ORDER BY h) AS rk, count(*) OVER (PARTITION BY t) AS nh
+         |       FROM win),
+         |est AS (SELECT t,
+         |          CASE WHEN max(nh) < $KmvK THEN max(nh)
+         |               ELSE ${(KmvK - 1).toLong * Sketches.Hash48Max} //
+         |                    max(CASE WHEN rk = $KmvK THEN h END)
+         |          END AS kmv_est
+         |        FROM wr GROUP BY t),
+         |ex AS (SELECT days.t, count(DISTINCT ev.user_id) AS exact_distinct
+         |       FROM days JOIN ev ON ev.day BETWEEN days.t - 6 AND days.t
+         |       GROUP BY days.t)
+         |SELECT est.t AS day, ex.exact_distinct,
+         |       CAST(est.kmv_est AS BIGINT) AS kmv_est
+         |FROM est JOIN ex USING (t)""".stripMargin),
 
     // HYPERLOGLOG distinct cardinality per source over the 3-shingle
     // stream, plus the '__all__' row built by MERGING the per-source
@@ -344,7 +413,7 @@ object SketchQueries {
     // stream is never distinct'd — duplicates collapse inside the
     // map-side-combined register max. exact_distinct is the
     // verification column (a real shuffle) the 100 TB path drops.
-    "q264_hll_distinct" -> ((s, d) => {
+    QuerySpec("q264_hll_distinct", (s, d) => {
       val sh = docs(s, d)
         .select(col("source"), explode(shingles(col("text"), 3)).as("g"))
       val hashed = sh.select(col("source"),
@@ -363,7 +432,11 @@ object SketchQueries {
           .select(lit("__all__").as("source"), col("exact_distinct")))
       est.join(exact, Seq("source"))
         .select(col("source"), col("exact_distinct"), col("hll_est"))
-    }),
+    },
+      // '__all__' computed directly from the global stream (the Spark
+      // side merges per-source register tables twice) — the gate's
+      // proof of register-max associativity + idempotence
+      hllSql),
 
     // The PURE-SQL surface end to end: the same HLL report written as
     // ONE spark.sql(...) string using the registered function surface
@@ -372,7 +445,7 @@ object SketchQueries {
     // '__all__' twin), and the BIGINT estimator as higher-order-
     // function arithmetic over the register array. A user who only
     // speaks SQL gets the identical engine — q264's oracle VERBATIM.
-    "q314_sql_surface" -> ((s, d) => {
+    QuerySpec("q314_sql_surface", (s, d) => {
       graft.functions.GraftFunctions.registerAll(s)
       docs(s, d).createOrReplaceTempView("g_sql_docs")
       val m = 1L << HllP
@@ -401,7 +474,9 @@ object SketchQueries {
            |  SELECT '__all__', count(DISTINCT g) FROM sh)
            |SELECT est.source, ex.exact_distinct, est.hll_est
            |FROM est JOIN ex ON est.source = ex.source""".stripMargin)
-    }),
+    },
+      // and the pure-spark.sql rendering of the same report — verbatim
+      hllSql),
 
     // The NATIVE Catalyst AGGREGATE path (functions.HllRegistersAgg,
     // a TypedImperativeAggregate): per-group state is a mutable
@@ -412,7 +487,7 @@ object SketchQueries {
     // same arithmetic as Sketches.hllRegisters, so the estimates must
     // land on q264's oracle VERBATIM — which is exactly the proof the
     // update/merge/serialize path is correct.
-    "q311_hll_native_agg" -> ((s, d) => {
+    QuerySpec("q311_hll_native_agg", (s, d) => {
       val sh = docs(s, d)
         .select(col("source"), explode(shingles(col("text"), 3)).as("g"))
       val hashed = sh.select(col("source"),
@@ -437,7 +512,10 @@ object SketchQueries {
           .select(lit("__all__").as("source"), col("exact_distinct")))
       est.join(exact, Seq("source"))
         .select(col("source"), col("exact_distinct"), col("hll_est"))
-    }),
+    },
+      // the native TypedImperativeAggregate's update/merge/serialize
+      // path must land on the same estimates — q264's oracle verbatim
+      hllSql),
 
     // The STREAMING HLL fold (StreamingSketch.processHllBatch — the
     // foreachBatch sink's exact per-batch path) driven over 5 batches
@@ -447,7 +525,7 @@ object SketchQueries {
     // class, not the q233/q243 linear class). Final state must equal
     // from-scratch q264 — its oracle VERBATIM. Standing table ≤
     // |sources|·2^p small-int rows regardless of streamed history.
-    "q269_hll_stream" -> ((s, d) => {
+    QuerySpec("q269_hll_stream", (s, d) => {
       val table = "graft_hll_stream_" + math.abs(d.hashCode.toLong)
       s.sql(s"DROP TABLE IF EXISTS $table")
       val base = docs(s, d)
@@ -476,7 +554,11 @@ object SketchQueries {
           .select(lit("__all__").as("source"), col("exact_distinct")))
       est.join(exact, Seq("source"))
         .select(col("source"), col("exact_distinct"), col("hll_est"))
-    }),
+    },
+      // the streaming fold's final table must equal from-scratch q264
+      // even under the deliberate batch-2 redelivery — register max is
+      // idempotent, so no ledger exists to consult
+      hllSql, writes = true),
 
     // KMV SET ALGEBRA: union, intersection, and Jaccard of every
     // src0–src4 pair estimated from their k=64 sketches alone (the
@@ -487,7 +569,7 @@ object SketchQueries {
     // sketch lookups — no shingle re-scan per pair. All integer
     // arithmetic; saturation (union sketch shorter than k) falls back
     // to exact-by-construction, mirrored in the oracle.
-    "q259_kmv_set_algebra" -> ((s, d) => {
+    QuerySpec("q259_kmv_set_algebra", (s, d) => {
       val K = KmvK
       val w = org.apache.spark.sql.expressions.Window
       val srcs = (0 until 5).map(i => s"src$i")
@@ -549,7 +631,69 @@ object SketchQueries {
         .select(col("src_a"), col("src_b"), col("exact_union"),
           col("est_union"), col("exact_intersect"), col("est_intersect"),
           col("est_jaccard_bp"))
-    }),
+    },
+      s"""WITH toks AS (SELECT source, string_split(text, ' ') AS w
+         |              FROM documents WHERE source IN
+         |                ('src0','src1','src2','src3','src4')),
+         |gsh AS (SELECT source,
+         |          unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+         |                  for i in range(1, len(w)-1)]) AS g
+         |        FROM toks),
+         |sh AS (SELECT DISTINCT source,
+         |         ('0x' || substr(md5(g), 1, 12))::BIGINT AS h FROM gsh),
+         |sk AS (SELECT source, h FROM (
+         |         SELECT source, h, row_number() OVER
+         |           (PARTITION BY source ORDER BY h) AS rk FROM sh)
+         |       WHERE rk <= $KmvK),
+         |pr AS (SELECT a.source AS src_a, b.source AS src_b
+         |       FROM (SELECT DISTINCT source FROM sh) a,
+         |            (SELECT DISTINCT source FROM sh) b
+         |       WHERE a.source < b.source),
+         |u AS (SELECT DISTINCT src_a, src_b, h FROM (
+         |        SELECT pr.src_a, pr.src_b, sk.h FROM pr
+         |        JOIN sk ON sk.source = pr.src_a
+         |        UNION ALL
+         |        SELECT pr.src_a, pr.src_b, sk.h FROM pr
+         |        JOIN sk ON sk.source = pr.src_b) t),
+         |ur AS (SELECT src_a, src_b, h, row_number() OVER
+         |         (PARTITION BY src_a, src_b ORDER BY h) AS rk FROM u),
+         |nu AS (SELECT src_a, src_b, CAST(max(rk) AS BIGINT) AS n_u
+         |       FROM ur GROUP BY 1, 2),
+         |th AS (SELECT src_a, src_b, h AS theta FROM ur WHERE rk = $KmvK),
+         |cm AS (SELECT a.source AS src_a, b.source AS src_b, a.h
+         |       FROM sk a JOIN sk b
+         |         ON a.h = b.h AND a.source < b.source),
+         |cc AS (SELECT pr.src_a, pr.src_b, nu.n_u, th.theta,
+         |         CAST(sum(CASE WHEN cm.h IS NOT NULL AND
+         |             (th.theta IS NULL OR cm.h < th.theta)
+         |           THEN 1 ELSE 0 END) AS BIGINT) AS c
+         |       FROM pr JOIN nu USING (src_a, src_b)
+         |       LEFT JOIN th USING (src_a, src_b)
+         |       LEFT JOIN cm USING (src_a, src_b)
+         |       GROUP BY 1, 2, 3, 4),
+         |na AS (SELECT source AS src_a, count(*)::BIGINT AS n_a
+         |       FROM sh GROUP BY 1),
+         |nb AS (SELECT source AS src_b, count(*)::BIGINT AS n_b
+         |       FROM sh GROUP BY 1),
+         |xi AS (SELECT a.source AS src_a, b.source AS src_b,
+         |         count(*)::BIGINT AS exact_intersect
+         |       FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
+         |       GROUP BY 1, 2),
+         |fin AS (SELECT cc.src_a, cc.src_b, cc.n_u, cc.theta, cc.c,
+         |          na.n_a, nb.n_b,
+         |          coalesce(xi.exact_intersect, 0) AS exact_intersect,
+         |          CASE WHEN cc.theta IS NULL THEN cc.n_u
+         |               ELSE ${(KmvK - 1).toLong * Sketches.Hash48Max} // cc.theta
+         |          END AS est_u
+         |        FROM cc JOIN na USING (src_a) JOIN nb USING (src_b)
+         |        LEFT JOIN xi USING (src_a, src_b))
+         |SELECT src_a, src_b,
+         |  CAST(n_a + n_b - exact_intersect AS BIGINT) AS exact_union,
+         |  CAST(est_u AS BIGINT) AS est_union,
+         |  CAST(exact_intersect AS BIGINT) AS exact_intersect,
+         |  CAST(c * est_u // least(n_u, $KmvK) AS BIGINT) AS est_intersect,
+         |  CAST(c * 10000 // least(n_u, $KmvK) AS BIGINT) AS est_jaccard_bp
+         |FROM fin""".stripMargin),
 
     // Join-SIZE estimation from sketches alone — the query-optimizer
     // statistic: |old ⋈ new on token| = Σ_w c_old(w)·c_new(w), and the
@@ -557,7 +701,7 @@ object SketchQueries {
     // true pair collides into the same cell; hash collisions only
     // add), so min over rows is the classic estimate. Exact side is
     // the verification column; both integer-exact through the gate.
-    "q245_cms_join_size" -> ((s, d) => {
+    QuerySpec("q245_cms_join_size", (s, d) => {
       val tok = docs(s, d).select(col("doc_id"),
         explode(tokens(col("text"))).as("w"))
       def tf(p: DataFrame) = p.groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -576,7 +720,29 @@ object SketchQueries {
       exact.crossJoin(est)
         .select(col("exact_join_size"), col("cms_join_est"),
           (col("cms_join_est") >= col("exact_join_size")).as("over_ok"))
-    }),
+    },
+      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+         |            FROM documents),
+         |otf AS (SELECT w, count(*)::BIGINT AS c FROM tok
+         |        WHERE doc_id % 5 <> 0 GROUP BY w),
+         |ntf AS (SELECT w, count(*)::BIGINT AS c FROM tok
+         |        WHERE doc_id % 5 = 0 GROUP BY w),
+         |rs AS (SELECT unnest(range($CmsDepth)) AS r),
+         |oc AS (SELECT r, ${h48Sql("r::VARCHAR || '|' || w")} % $CmsWidth
+         |         AS bucket, CAST(sum(c) AS BIGINT) AS co
+         |       FROM otf CROSS JOIN rs GROUP BY r, bucket),
+         |nc AS (SELECT r, ${h48Sql("r::VARCHAR || '|' || w")} % $CmsWidth
+         |         AS bucket, CAST(sum(c) AS BIGINT) AS cn
+         |       FROM ntf CROSS JOIN rs GROUP BY r, bucket),
+         |est AS (SELECT min(e) AS cms_join_est FROM (
+         |          SELECT r, CAST(sum(co * cn) AS BIGINT) AS e
+         |          FROM oc JOIN nc USING (r, bucket) GROUP BY r)),
+         |ex AS (SELECT CAST(coalesce(sum(otf.c * ntf.c), 0) AS BIGINT)
+         |         AS exact_join_size
+         |       FROM otf JOIN ntf USING (w))
+         |SELECT ex.exact_join_size, est.cms_join_est,
+         |       est.cms_join_est >= ex.exact_join_size AS over_ok
+         |FROM ex CROSS JOIN est""".stripMargin),
 
     // Per-source histogram ROLLUP: source-level histograms merged by
     // cell-wise sum, then the q213 quantile report over the MERGED
@@ -584,20 +750,23 @@ object SketchQueries {
     // histogram directly (q213's SQL verbatim), so the gate proves
     // histogram merge associativity exactly as q211's __all__ row
     // does for KMV.
-    "q230_hist_rollup" -> ((s, d) => {
+    QuerySpec("q230_hist_rollup", (s, d) => {
       val merged = docs(s, d)
         .groupBy(col("source"), expr(s"n_chars div $HistWidth").as("bucket"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
       histQuantileReport(s, docs(s, d), merged)
-    }),
+    },
+      // the rollup must be indistinguishable from the direct histogram —
+      // merge associativity through the gate, q213's oracle verbatim
+      histSql),
 
     // The STREAMING histogram fold (StreamingSketch.processHistBatch)
     // over 5 batches PLUS a replay of batch 2 — the third linear
     // sketch on the ledgered-fold sink discipline (data cells at
     // bucket ≥ 0, ledger sentinels at -1-batchId, one commit). Final
     // cells feed the q213 quantile report — its oracle VERBATIM.
-    "q243_hist_stream" -> ((s, d) => {
+    QuerySpec("q243_hist_stream", (s, d) => {
       val table = "graft_hist_stream_" + math.abs(d.hashCode.toLong)
       s.sql(s"DROP TABLE IF EXISTS $table")
       val base = docs(s, d)
@@ -611,7 +780,10 @@ object SketchQueries {
         HistWidth, table, 2L)
       histQuantileReport(s, docs(s, d),
         s.table(table).filter(col("bucket") >= 0L))
-    }),
+    },
+      // and the streamed fold with a replayed batch skipped by the
+      // ledger — q213's oracle verbatim
+      histSql, writes = true),
 
     // EXACT type-1 quantiles in TWO passes, no global sort
     // (Quantiles.exactQuantiles): pass 1 locates each percentile's
@@ -620,13 +792,35 @@ object SketchQueries {
     // only brackets (est_hi within one width above) — the two
     // operators are the speed/precision pair a quantile service
     // chooses between.
-    "q301_exact_quantiles" -> ((s, d) =>
-      Quantiles.exactQuantiles(docs(s, d), "n_chars", HistWidth, Pcts)),
+    QuerySpec("q301_exact_quantiles", (s, d) =>
+      Quantiles.exactQuantiles(docs(s, d), "n_chars", HistWidth, Pcts),
+      // the exact type-1 definition from first principles: smallest v
+      // whose cumulative count reaches ceil(p·n/100)
+      s"""WITH vc AS (SELECT n_chars AS v, count(*) AS cnt
+         |            FROM documents GROUP BY 1),
+         |cum AS (SELECT v, sum(cnt) OVER (ORDER BY v) AS cum FROM vc),
+         |tot AS (SELECT count(*)::BIGINT AS n FROM documents),
+         |p AS (SELECT unnest([${Pcts.mkString(", ")}]) AS pct)
+         |SELECT pct::BIGINT AS pct, CAST(min(v) AS BIGINT) AS exact_v
+         |FROM cum, tot, p WHERE cum * 100 >= pct * n
+         |GROUP BY 1""".stripMargin),
     // and per-key: every source's exact quantile grid, the same two
     // key-scoped passes (cells and pass-2 rows both carry the key).
-    "q302_quantiles_by_source" -> ((s, d) =>
+    QuerySpec("q302_quantiles_by_source", (s, d) =>
       Quantiles.exactQuantilesByKey(docs(s, d), "source", "n_chars",
-        HistWidth, Pcts)),
+        HistWidth, Pcts),
+      s"""WITH vc AS (SELECT source AS key, n_chars AS v, count(*) AS cnt
+         |            FROM documents GROUP BY 1, 2),
+         |cum AS (SELECT key, v, sum(cnt) OVER (PARTITION BY key
+         |          ORDER BY v) AS cum FROM vc),
+         |tot AS (SELECT source AS key, count(*)::BIGINT AS n
+         |        FROM documents GROUP BY 1),
+         |p AS (SELECT unnest([${Pcts.mkString(", ")}]) AS pct)
+         |SELECT cum.key, pct::BIGINT AS pct,
+         |       CAST(min(v) AS BIGINT) AS exact_v
+         |FROM cum JOIN tot USING (key) CROSS JOIN p
+         |WHERE cum * 100 >= pct * n
+         |GROUP BY 1, 2""".stripMargin),
 
     // Histogram DELETE-fold: the standing grid minus the deleted
     // slice's grid (emptied buckets dropped) feeds the q213 quantile
@@ -635,14 +829,18 @@ object SketchQueries {
     // invertibility taxonomy the delete wave documents: histogram
     // and CMS cells are linear (subtract-fold), KMV/HLL max-merges
     // are not (erasure there = rebuild).
-    "q289_hist_delete" -> ((s, d) => {
+    QuerySpec("q289_hist_delete", (s, d) => {
       val base = docs(s, d)
       def h(p: DataFrame) =
         Sketches.histogram(p.select(col("n_chars")), "n_chars", HistWidth)
       histQuantileReport(s, base.filter(col("doc_id") % 7 =!= 3),
         Sketches.histSubtract(h(base),
           h(base.filter(col("doc_id") % 7 === 3))))
-    }),
+    },
+      // subtract-fold == from-scratch over survivors: q213's oracle on
+      // the filtered corpus
+      ("WITH documents AS (SELECT * FROM main.documents " +
+        "WHERE doc_id % 7 <> 3),\n" + histSql.stripPrefix("WITH "))),
 
     // Histogram quantiles: a width-64 fixed grid over n_chars (cells
     // merge by sum — the per-partition / per-day rollup state) whose
@@ -650,9 +848,10 @@ object SketchQueries {
     // exact type-1 quantile; the exact side is the verification
     // column. Cumulative windows run over aggregated cells (≤
     // max/width rows), never data rows.
-    "q213_hist_quantiles" -> ((s, d) =>
+    QuerySpec("q213_hist_quantiles", (s, d) =>
       histQuantileReport(s, docs(s, d), Sketches.histogram(
-        docs(s, d).select(col("n_chars")), "n_chars", HistWidth))))
+        docs(s, d).select(col("n_chars")), "n_chars", HistWidth)),
+      histSql))
 
   /** The q213 report tail over ANY n_chars histogram frame (bucket,
     * cnt): estimates from the cells, exact type-1 quantiles from the
@@ -723,223 +922,6 @@ object SketchQueries {
        |JOIN cells ON cells.r = rs.r
        | AND cells.bucket = ${h48Sql("rs.r::VARCHAR || '|' || cand.w")} % $CmsWidth
        |GROUP BY cand.w, cand.c""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-
-    "q211_kmv_distinct" -> kmvSql,
-    "q224_kmv_incremental" -> kmvSql,
-    "q228_kmv_stream" -> kmvSql,
-
-    "q212_cms_heavy_hitters" -> cmsSql,
-    // fold(old, batch) must be indistinguishable from from-scratch —
-    // CMS linearity through the gate, q212's oracle verbatim
-    "q232_cms_incremental" -> cmsSql,
-    // subtract-fold == from-scratch over survivors: q212's oracle on
-    // the filtered corpus (CTE shadows the view; main. disambiguates)
-    "q282_cms_delete" ->
-      ("WITH documents AS (SELECT * FROM main.documents " +
-        "WHERE doc_id % 7 <> 3),\n" + cmsSql.stripPrefix("WITH ")),
-    // and the streamed fold with a replayed batch skipped by the
-    // ledger must land on the same table — q212's oracle verbatim
-    "q233_cms_stream" -> cmsSql,
-
-    "q213_hist_quantiles" -> histSql,
-    // the exact type-1 definition from first principles: smallest v
-    // whose cumulative count reaches ceil(p·n/100)
-    "q301_exact_quantiles" ->
-      s"""WITH vc AS (SELECT n_chars AS v, count(*) AS cnt
-         |            FROM documents GROUP BY 1),
-         |cum AS (SELECT v, sum(cnt) OVER (ORDER BY v) AS cum FROM vc),
-         |tot AS (SELECT count(*)::BIGINT AS n FROM documents),
-         |p AS (SELECT unnest([${Pcts.mkString(", ")}]) AS pct)
-         |SELECT pct::BIGINT AS pct, CAST(min(v) AS BIGINT) AS exact_v
-         |FROM cum, tot, p WHERE cum * 100 >= pct * n
-         |GROUP BY 1""".stripMargin,
-    "q302_quantiles_by_source" ->
-      s"""WITH vc AS (SELECT source AS key, n_chars AS v, count(*) AS cnt
-         |            FROM documents GROUP BY 1, 2),
-         |cum AS (SELECT key, v, sum(cnt) OVER (PARTITION BY key
-         |          ORDER BY v) AS cum FROM vc),
-         |tot AS (SELECT source AS key, count(*)::BIGINT AS n
-         |        FROM documents GROUP BY 1),
-         |p AS (SELECT unnest([${Pcts.mkString(", ")}]) AS pct)
-         |SELECT cum.key, pct::BIGINT AS pct,
-         |       CAST(min(v) AS BIGINT) AS exact_v
-         |FROM cum JOIN tot USING (key) CROSS JOIN p
-         |WHERE cum * 100 >= pct * n
-         |GROUP BY 1, 2""".stripMargin,
-    // subtract-fold == from-scratch over survivors: q213's oracle on
-    // the filtered corpus
-    "q289_hist_delete" ->
-      ("WITH documents AS (SELECT * FROM main.documents " +
-        "WHERE doc_id % 7 <> 3),\n" + histSql.stripPrefix("WITH ")),
-    // the rollup must be indistinguishable from the direct histogram —
-    // merge associativity through the gate, q213's oracle verbatim
-    "q230_hist_rollup" -> histSql,
-    // and the streamed fold with a replayed batch skipped by the
-    // ledger — q213's oracle verbatim
-    "q243_hist_stream" -> histSql,
-
-    "q263_kmv_rolling" ->
-      s"""WITH ev AS (SELECT DISTINCT epoch_ns(ts) // 86400000000000 AS day,
-         |              user_id FROM events),
-         |hs AS (SELECT DISTINCT day,
-         |         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT
-         |           AS h FROM ev),
-         |sk AS (SELECT day, h FROM (
-         |         SELECT day, h, row_number() OVER (PARTITION BY day
-         |           ORDER BY h) AS rk FROM hs) t WHERE rk <= $KmvK),
-         |days AS (SELECT DISTINCT day AS t FROM ev),
-         |win AS (SELECT DISTINCT days.t, sk.h
-         |        FROM days JOIN sk ON sk.day BETWEEN days.t - 6 AND days.t),
-         |wr AS (SELECT t, h, row_number() OVER (PARTITION BY t
-         |         ORDER BY h) AS rk, count(*) OVER (PARTITION BY t) AS nh
-         |       FROM win),
-         |est AS (SELECT t,
-         |          CASE WHEN max(nh) < $KmvK THEN max(nh)
-         |               ELSE ${(KmvK - 1).toLong * Sketches.Hash48Max} //
-         |                    max(CASE WHEN rk = $KmvK THEN h END)
-         |          END AS kmv_est
-         |        FROM wr GROUP BY t),
-         |ex AS (SELECT days.t, count(DISTINCT ev.user_id) AS exact_distinct
-         |       FROM days JOIN ev ON ev.day BETWEEN days.t - 6 AND days.t
-         |       GROUP BY days.t)
-         |SELECT est.t AS day, ex.exact_distinct,
-         |       CAST(est.kmv_est AS BIGINT) AS kmv_est
-         |FROM est JOIN ex USING (t)""".stripMargin,
-
-    // '__all__' computed directly from the global stream (the Spark
-    // side merges per-source register tables twice) — the gate's
-    // proof of register-max associativity + idempotence
-    "q264_hll_distinct" -> hllSql,
-    // the native TypedImperativeAggregate's update/merge/serialize
-    // path must land on the same estimates — q264's oracle verbatim
-    "q311_hll_native_agg" -> hllSql,
-    // and the pure-spark.sql rendering of the same report — verbatim
-    "q314_sql_surface" -> hllSql,
-    // the streaming fold's final table must equal from-scratch q264
-    // even under the deliberate batch-2 redelivery — register max is
-    // idempotent, so no ledger exists to consult
-    "q269_hll_stream" -> hllSql,
-    "q259_kmv_set_algebra" ->
-      s"""WITH toks AS (SELECT source, string_split(text, ' ') AS w
-         |              FROM documents WHERE source IN
-         |                ('src0','src1','src2','src3','src4')),
-         |gsh AS (SELECT source,
-         |          unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                  for i in range(1, len(w)-1)]) AS g
-         |        FROM toks),
-         |sh AS (SELECT DISTINCT source,
-         |         ('0x' || substr(md5(g), 1, 12))::BIGINT AS h FROM gsh),
-         |sk AS (SELECT source, h FROM (
-         |         SELECT source, h, row_number() OVER
-         |           (PARTITION BY source ORDER BY h) AS rk FROM sh)
-         |       WHERE rk <= $KmvK),
-         |pr AS (SELECT a.source AS src_a, b.source AS src_b
-         |       FROM (SELECT DISTINCT source FROM sh) a,
-         |            (SELECT DISTINCT source FROM sh) b
-         |       WHERE a.source < b.source),
-         |u AS (SELECT DISTINCT src_a, src_b, h FROM (
-         |        SELECT pr.src_a, pr.src_b, sk.h FROM pr
-         |        JOIN sk ON sk.source = pr.src_a
-         |        UNION ALL
-         |        SELECT pr.src_a, pr.src_b, sk.h FROM pr
-         |        JOIN sk ON sk.source = pr.src_b) t),
-         |ur AS (SELECT src_a, src_b, h, row_number() OVER
-         |         (PARTITION BY src_a, src_b ORDER BY h) AS rk FROM u),
-         |nu AS (SELECT src_a, src_b, CAST(max(rk) AS BIGINT) AS n_u
-         |       FROM ur GROUP BY 1, 2),
-         |th AS (SELECT src_a, src_b, h AS theta FROM ur WHERE rk = $KmvK),
-         |cm AS (SELECT a.source AS src_a, b.source AS src_b, a.h
-         |       FROM sk a JOIN sk b
-         |         ON a.h = b.h AND a.source < b.source),
-         |cc AS (SELECT pr.src_a, pr.src_b, nu.n_u, th.theta,
-         |         CAST(sum(CASE WHEN cm.h IS NOT NULL AND
-         |             (th.theta IS NULL OR cm.h < th.theta)
-         |           THEN 1 ELSE 0 END) AS BIGINT) AS c
-         |       FROM pr JOIN nu USING (src_a, src_b)
-         |       LEFT JOIN th USING (src_a, src_b)
-         |       LEFT JOIN cm USING (src_a, src_b)
-         |       GROUP BY 1, 2, 3, 4),
-         |na AS (SELECT source AS src_a, count(*)::BIGINT AS n_a
-         |       FROM sh GROUP BY 1),
-         |nb AS (SELECT source AS src_b, count(*)::BIGINT AS n_b
-         |       FROM sh GROUP BY 1),
-         |xi AS (SELECT a.source AS src_a, b.source AS src_b,
-         |         count(*)::BIGINT AS exact_intersect
-         |       FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
-         |       GROUP BY 1, 2),
-         |fin AS (SELECT cc.src_a, cc.src_b, cc.n_u, cc.theta, cc.c,
-         |          na.n_a, nb.n_b,
-         |          coalesce(xi.exact_intersect, 0) AS exact_intersect,
-         |          CASE WHEN cc.theta IS NULL THEN cc.n_u
-         |               ELSE ${(KmvK - 1).toLong * Sketches.Hash48Max} // cc.theta
-         |          END AS est_u
-         |        FROM cc JOIN na USING (src_a) JOIN nb USING (src_b)
-         |        LEFT JOIN xi USING (src_a, src_b))
-         |SELECT src_a, src_b,
-         |  CAST(n_a + n_b - exact_intersect AS BIGINT) AS exact_union,
-         |  CAST(est_u AS BIGINT) AS est_union,
-         |  CAST(exact_intersect AS BIGINT) AS exact_intersect,
-         |  CAST(c * est_u // least(n_u, $KmvK) AS BIGINT) AS est_intersect,
-         |  CAST(c * 10000 // least(n_u, $KmvK) AS BIGINT) AS est_jaccard_bp
-         |FROM fin""".stripMargin,
-
-    "q245_cms_join_size" ->
-      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-         |            FROM documents),
-         |otf AS (SELECT w, count(*)::BIGINT AS c FROM tok
-         |        WHERE doc_id % 5 <> 0 GROUP BY w),
-         |ntf AS (SELECT w, count(*)::BIGINT AS c FROM tok
-         |        WHERE doc_id % 5 = 0 GROUP BY w),
-         |rs AS (SELECT unnest(range($CmsDepth)) AS r),
-         |oc AS (SELECT r, ${h48Sql("r::VARCHAR || '|' || w")} % $CmsWidth
-         |         AS bucket, CAST(sum(c) AS BIGINT) AS co
-         |       FROM otf CROSS JOIN rs GROUP BY r, bucket),
-         |nc AS (SELECT r, ${h48Sql("r::VARCHAR || '|' || w")} % $CmsWidth
-         |         AS bucket, CAST(sum(c) AS BIGINT) AS cn
-         |       FROM ntf CROSS JOIN rs GROUP BY r, bucket),
-         |est AS (SELECT min(e) AS cms_join_est FROM (
-         |          SELECT r, CAST(sum(co * cn) AS BIGINT) AS e
-         |          FROM oc JOIN nc USING (r, bucket) GROUP BY r)),
-         |ex AS (SELECT CAST(coalesce(sum(otf.c * ntf.c), 0) AS BIGINT)
-         |         AS exact_join_size
-         |       FROM otf JOIN ntf USING (w))
-         |SELECT ex.exact_join_size, est.cms_join_est,
-         |       est.cms_join_est >= ex.exact_join_size AS over_ok
-         |FROM ex CROSS JOIN est""".stripMargin,
-
-    "q229_cms_drift" ->
-      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-         |            FROM documents),
-         |otf AS (SELECT w, count(*)::BIGINT AS c FROM tok
-         |        WHERE doc_id % 5 <> 0 GROUP BY w),
-         |ntf AS (SELECT w, count(*)::BIGINT AS c FROM tok
-         |        WHERE doc_id % 5 = 0 GROUP BY w),
-         |no AS (SELECT CAST(sum(c) AS BIGINT) AS n_old FROM otf),
-         |nn AS (SELECT CAST(sum(c) AS BIGINT) AS n_new FROM ntf),
-         |rs AS (SELECT unnest(range($CmsDepth)) AS r),
-         |oc AS (SELECT r, ${h48Sql("r::VARCHAR || '|' || w")} % $CmsWidth
-         |         AS bucket, CAST(sum(c) AS BIGINT) AS co
-         |       FROM otf CROSS JOIN rs GROUP BY r, bucket),
-         |nc AS (SELECT r, ${h48Sql("r::VARCHAR || '|' || w")} % $CmsWidth
-         |         AS bucket, CAST(sum(c) AS BIGINT) AS cn
-         |       FROM ntf CROSS JOIN rs GROUP BY r, bucket),
-         |cells AS (SELECT coalesce(oc.r, nc.r) AS r,
-         |            coalesce(co, 0) AS co, coalesce(cn, 0) AS cn
-         |          FROM oc FULL OUTER JOIN nc
-         |            ON oc.r = nc.r AND oc.bucket = nc.bucket),
-         |l1 AS (SELECT r, CAST(sum(abs(co * n_new - cn * n_old)) AS BIGINT)
-         |         AS l1_sketch_x
-         |       FROM cells CROSS JOIN no CROSS JOIN nn GROUP BY r),
-         |exv AS (SELECT coalesce(otf.c, 0) AS co, coalesce(ntf.c, 0) AS cn
-         |        FROM otf FULL OUTER JOIN ntf ON otf.w = ntf.w),
-         |ex AS (SELECT CAST(sum(abs(co * n_new - cn * n_old)) AS BIGINT)
-         |         AS l1_exact_x
-         |       FROM exv CROSS JOIN no CROSS JOIN nn)
-         |SELECT CAST(l1.r AS BIGINT) AS sk_row, l1.l1_sketch_x, ex.l1_exact_x,
-         |       l1.l1_sketch_x <= ex.l1_exact_x AS lower_bound_ok
-         |FROM l1 CROSS JOIN ex""".stripMargin)
 
   private lazy val histSql: String =
     s"""WITH hist AS (SELECT n_chars // $HistWidth AS bucket, count(*) AS cnt

@@ -175,9 +175,4 @@ object RollupRewrite {
       spark.experimental.extraOptimizations
         .filterNot(_.isInstanceOf[RollupRewrite]) :+
         new RollupRewrite(rollup.queryExecution.analyzed)
-
-  def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[RollupRewrite])
 }

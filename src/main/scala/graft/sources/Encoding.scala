@@ -59,11 +59,4 @@ object Encoding {
     val noBom = if (raw.nonEmpty && raw.charAt(0) == '\uFEFF') raw.substring(1) else raw
     noBom.replace("\r\n", "\n").replace('\r', '\n')
   }
-
-  /** Lines of a file in Python text-mode semantics. */
-  def readLines(path: String): (Array[String], String) = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val enc = detect(bytes)
-    (decode(bytes, enc).split("\n", -1), enc)
-  }
 }

@@ -189,7 +189,7 @@ class TextOpsSpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Seq("q17_minhash_signatures", "q18_dedup_minhash_lsh", "q19_ngram_jaccard",
       "q41_dedup_groups", "q42_embedding_dup_groups", "q43_ivf_topk_exact")
-      .foreach(q => TextPipelineQueries.queries(q)(spark, d).collect())
+      .foreach(q => SparkEntry.queries(q)(spark, d).collect())
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty)
     TextPipelineQueries.clearCache(spark)
     // compare against `before`, not empty: other suites share the session
