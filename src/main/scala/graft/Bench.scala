@@ -61,8 +61,7 @@ object Bench {
     // `total`, so an unnamed failure would read as a faster suite.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def fail(label: String, e: Throwable): Unit = {
-      val head = s"${e.getClass.getName}: " +
-        Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("").take(200)
+      val head = Verify.failureHead(e)
       System.err.println(s"[bench] $label failed: $head")
       if (!failed.contains(label)) failed(label) = head
     }
@@ -225,8 +224,7 @@ object Bench {
     // adjudication reads it.
     val head = f""""metric":"total","value":$total%.3f,"unit":"sec","compute_sec":$computeTotal%.3f,"write_phase_sec":$writeTotal%.3f,"iters":$iters,"write_iters":$writeIters,"warmup_sec":$warmupSec%.3f,"canary_sec":$canarySec%.3f,"canary_io_sec":$canaryIoSec%.3f,"bpe_full_train_sec":$bpeTrainSec%.3f,"cache_build_sec":$cacheBuild%.3f,"cache_build_steal_sec":$cacheSteal%.2f,"queries":$qs"""
     val compact = s"""{$head,"sf":"$sfDir"}"""
-    val failedJson = failed.map { case (k, v) =>
-      s"${Verify.jsonString(k)}:${Verify.jsonString(v)}" }.mkString("{", ",", "}")
+    val failedJson = Verify.jsonObject(failed)
     val full = s"""{$head,"n_failed":${failed.size},"failed":$failedJson,"queries_iters":$spreads,"queries_steal_sec":$steals,"queries_busy_frac":$busys,"queries_iowait_frac":$iowaits,"sf":"$sfDir"}"""
     // A ≤200-byte summary object with the headline numbers only, for
     // humans tailing the log — printed to STDERR before and after the

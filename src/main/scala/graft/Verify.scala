@@ -1,26 +1,38 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * errors.json naming each query that threw (`{}` when none did). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local(GraftSession.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(kv => SparkEntry.selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        errors(name) = failureHead(e)
+        System.err.println(s"[verify] $name failed: ${errors(name)}")
       }
     }
-    val json = SparkEntry.oracleSql.filter(kv => SparkEntry.selected(kv._1))
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObject(SparkEntry.oracleSql.filter(kv => SparkEntry.selected(kv._1))))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObject(errors))
     SparkEntry.clearCaches(spark)
     spark.stop()
   }
+
+  /** `Class: first message line` (≤ 200 chars): how Verify and Bench
+    * name a failed query. */
+  def failureHead(e: Throwable): String =
+    s"${e.getClass.getName}: " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("").take(200)
+
+  def jsonObject(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
 
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in hand-written oracle SQL would otherwise make the

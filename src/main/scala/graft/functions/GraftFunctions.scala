@@ -13,9 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - `positioned_shingles(string, n)` — GENERATOR: (pos, ngram) rows
   *  - `hll_registers_agg(hash48, p, cap)` — AGGREGATE: HLL registers
   *
-  * Also wired through [[graft.plans.GraftSparkExtensions]] so
-  * `spark.sql.extensions=graft.plans.GraftSparkExtensions` brings
-  * functions AND the native as-of strategy up with the session.
+  * The native as-of strategy registers separately, on first use, via
+  * [[graft.plans.NativeAsOf.ensureRegistered]].
   */
 object GraftFunctions {
 

@@ -11,8 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The as-of join as a first-class engine operator (SURVEY.md §2.5 J1
   * scale path; NOTES round-1 item 7): a custom logical node, planner
-  * strategy, and physical merge join, registered through
-  * `SparkSessionExtensions` / `spark.experimental.extraStrategies`.
+  * strategy, and physical merge join, registered on any live session
+  * through `spark.experimental.extraStrategies`
+  * ([[NativeAsOf.ensureRegistered]]).
   *
   * Where the composed form (operators.AsOfJoin) expresses backward
   * as-of via union + window, this operator IS the textbook physical

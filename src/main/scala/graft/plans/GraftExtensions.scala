@@ -1,31 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-
-/** Engine extension entry points.
-  *
-  * `spark.sql.extensions=graft.plans.GraftSparkExtensions` registers
-  * the custom planner strategies at session build; [[NativeAsOf]]
-  * also self-registers through `spark.experimental.extraStrategies`
-  * so the operator works on any existing session.
-  */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectFunction((FunctionIdentifier("blake2b"),
-      new ExpressionInfo(classOf[graft.functions.Blake2bHash].getName, "blake2b"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.Blake2bHash(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[graft.functions.CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.CosineSim(exprs(0), exprs(1))))
-  }
-}
 
 /** DataFrame-level API for the native as-of join operator. */
 object NativeAsOf {

@@ -131,18 +131,13 @@ object EventStreaming {
     * `spark.catalog.refreshTable(table)` to see newer micro-batches. */
   def bucketedSink(events: DataFrame, table: String, key: String, buckets: Int,
                    checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val writer = batch.write
-          .mode(org.apache.spark.sql.SaveMode.Append)
-          .bucketBy(buckets, key).sortBy(key)
-          .format("parquet")
-        writer.saveAsTable(table) // first batch creates, rest append
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
+    ForeachBatchSink.start(events, checkpointDir) { (batch, _) =>
+      batch.write
+        .mode(org.apache.spark.sql.SaveMode.Append)
+        .bucketBy(buckets, key).sortBy(key)
+        .format("parquet")
+        .saveAsTable(table) // first batch creates, rest append
+    }
 
   /** One-shot landing → bucketed compaction: read the streaming
     * parquet sink through its `_spark_metadata` commit log (only

@@ -34,12 +34,8 @@ object StreamingAnn {
   def indexSink(vectors: DataFrame, name: String, idCol: String,
                 vecCol: String,
                 checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          IvfIndex.appendSaved(batch.sparkSession, name, batch, idCol, vecCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
+    ForeachBatchSink.start(vectors, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty)
+        IvfIndex.appendSaved(batch.sparkSession, name, batch, idCol, vecCol)
+    }
 }

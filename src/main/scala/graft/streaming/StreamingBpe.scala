@@ -39,21 +39,17 @@ object StreamingBpe {
                  byteLevel: Boolean = false, specials: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val merges = Bpe.loadMerges(docs.sparkSession, mergesTable)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val toks =
-            TextFunctions.bpeEncode(col(textCol), merges, byteLevel, specials)
-          batch.select(col(idCol),
-              size(toks).cast("long").as("n_tokens"),
-              array_join(toks, " ").as("toks"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(outTable)
-        }
+    ForeachBatchSink.start(docs, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val toks =
+          TextFunctions.bpeEncode(col(textCol), merges, byteLevel, specials)
+        batch.select(col(idCol),
+            size(toks).cast("long").as("n_tokens"),
+            array_join(toks, " ").as("toks"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .format("parquet").saveAsTable(outTable)
       }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
+    }
   }
 
   /** Streaming DECODE sink — the detok half of the deployment loop
@@ -78,33 +74,29 @@ object StreamingBpe {
     val snap = Bpe.loadVocab(docs.sparkSession, vocabTable)
       .select(col("id").cast("long"), col("token"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          import s.implicits._
-          val vdf = snap.toDF("id", "token")
-          val toks = batch
-            .filter(length(col(idsCol)) > 0)
-            .select(col(idCol),
-              posexplode(split(col(idsCol), ",")).as(Seq("pos", "id")))
-            .select(col(idCol), col("pos"), col("id").cast("long").as("id"))
-            .join(broadcast(vdf), Seq("id"))
-            .groupBy(col(idCol))
-            .agg(count(lit(1)).cast("long").as("n_ids"),
-              transform(
-                array_sort(collect_list(struct(col("pos"), col("token")))),
-                x => x.getField("token")).as("__toks"))
-          val text =
-            if (byteLevel) Bpe.decodeBytes(col("__toks"), specials)
-            else replace(array_join(col("__toks"), ""), lit("▁"), lit(" "))
-          toks.select(col(idCol), col("n_ids"), text.as("text"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(outTable)
-        }
+    ForeachBatchSink.start(docs, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val s = batch.sparkSession
+        import s.implicits._
+        val vdf = snap.toDF("id", "token")
+        val toks = batch
+          .filter(length(col(idsCol)) > 0)
+          .select(col(idCol),
+            posexplode(split(col(idsCol), ",")).as(Seq("pos", "id")))
+          .select(col(idCol), col("pos"), col("id").cast("long").as("id"))
+          .join(broadcast(vdf), Seq("id"))
+          .groupBy(col(idCol))
+          .agg(count(lit(1)).cast("long").as("n_ids"),
+            transform(
+              array_sort(collect_list(struct(col("pos"), col("token")))),
+              x => x.getField("token")).as("__toks"))
+        val text =
+          if (byteLevel) Bpe.decodeBytes(col("__toks"), specials)
+          else replace(array_join(col("__toks"), ""), lit("▁"), lit(" "))
+        toks.select(col(idCol), col("n_ids"), text.as("text"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .format("parquet").saveAsTable(outTable)
       }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 
 /** Streaming CDC-apply sink: each micro-batch of change events folds
   * into the standing snapshot table via [[graft.operators.Cdc.fold]].
@@ -12,36 +12,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object StreamingCdc {
 
-  def cdcSink(changes: DataFrame, keyCol: String, seqCols: Seq[String],
-              opCol: String, payloadCols: Seq[String], table: String,
-              checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processCdcBatch(batch, keyCol, seqCols, opCol, payloadCols, table)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** One micro-batch's fold (factored out for the gated query and
-    * batch-ingest callers). localCheckpoint before the overwrite so
-    * the job never scans the table it replaces. */
+    * batch-ingest callers), through [[StandingTable.fold]]. */
   def processCdcBatch(batch: DataFrame, keyCol: String,
                       seqCols: Seq[String], opCol: String,
                       payloadCols: Seq[String], table: String): Unit = {
-    val spark = batch.sparkSession
     if (batch.isEmpty) return
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) graft.operators.Bucketing.dropManagedTable(spark, table)
-    val next =
-      if (exists)
-        graft.operators.Cdc.fold(spark.table(table), batch, keyCol,
-          seqCols, opCol, payloadCols)
-      else
-        graft.operators.Cdc.snapshot(batch, keyCol, seqCols, opCol,
-          payloadCols)
-    next.localCheckpoint(true).write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table)
+    StandingTable.fold(batch.sparkSession, table) {
+      case Some(prior) => Some(graft.operators.Cdc.fold(prior, batch,
+        keyCol, seqCols, opCol, payloadCols))
+      case None => Some(graft.operators.Cdc.snapshot(batch, keyCol,
+        seqCols, opCol, payloadCols))
+    }
   }
 }

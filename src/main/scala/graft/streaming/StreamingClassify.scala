@@ -45,17 +45,13 @@ object StreamingClassify {
                   idCol: String, textCol: String, dim: Int,
                   checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val weights = batch.sparkSession.table(weightsTable)
-          Curation.nbPredictMulti(batch, idCol, textCol, weights, dim)
-            .crossJoin(broadcast(weightFingerprint(weights)))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(outTable)
-        }
+    ForeachBatchSink.start(docs, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val weights = batch.sparkSession.table(weightsTable)
+        Curation.nbPredictMulti(batch, idCol, textCol, weights, dim)
+          .crossJoin(broadcast(weightFingerprint(weights)))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .format("parquet").saveAsTable(outTable)
       }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
+    }
 }

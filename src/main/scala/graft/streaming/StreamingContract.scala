@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Expectations
 import graft.operators.Expectations._
@@ -48,25 +48,21 @@ object StreamingContract {
                            table: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val bs = normalized(batch, rules)
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) graft.operators.Bucketing.dropManagedTable(spark, table)
-    val merged =
-      if (exists) {
-        val prior = spark.table(table)
-        if (!prior.filter(col("rule") === Ledger &&
-            col("key") === batchId.toString).isEmpty)
-          return // replay: already folded
-        prior.filter(col("rule") =!= Ledger).unionByName(bs)
-          .groupBy(col("rule"), col("key"))
-          .agg(sum(col("c")).as("c"), max(col("matched")).as("matched"))
-          .unionByName(prior.filter(col("rule") === Ledger))
-      } else bs
-    merged
-      .unionByName(spark.range(1).select(lit(Ledger).as("rule"),
-        lit(batchId.toString).as("key"), lit(0L).as("c"),
-        lit(true).as("matched")))
-      .localCheckpoint(true).write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table)
+    val ledgerRow = spark.range(1).select(lit(Ledger).as("rule"),
+      lit(batchId.toString).as("key"), lit(0L).as("c"),
+      lit(true).as("matched"))
+    StandingTable.fold(spark, table) {
+      case Some(prior) if !prior.filter(col("rule") === Ledger &&
+          col("key") === batchId.toString).isEmpty =>
+        None // replay: already folded
+      case Some(prior) => Some(prior.filter(col("rule") =!= Ledger)
+        .unionByName(bs)
+        .groupBy(col("rule"), col("key"))
+        .agg(sum(col("c")).as("c"), max(col("matched")).as("matched"))
+        .unionByName(prior.filter(col("rule") === Ledger))
+        .unionByName(ledgerRow))
+      case None => Some(bs.unionByName(ledgerRow))
+    }
   }
 
   /** Rehydrate the per-rule state map from the uniform table and

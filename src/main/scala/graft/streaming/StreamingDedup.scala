@@ -30,19 +30,6 @@ import graft.operators.Dedup
   */
 object StreamingDedup {
 
-  /** Start the incremental dedup sink over a stream of
-    * (`idCol`, `textCol`) documents. */
-  def labelSink(docs: DataFrame, idCol: String, textCol: String,
-                sigTable: String, labelTable: String,
-                checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, idCol, textCol, sigTable, labelTable)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** One micro-batch's incremental update (factored out so a
     * non-streaming caller — e.g. a nightly batch ingest — can drive
     * the identical path). */

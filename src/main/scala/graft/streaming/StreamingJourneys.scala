@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import graft.operators.UserJourneys
 
 /** Streaming dimension maintenance: each micro-batch of events folds
@@ -22,36 +22,17 @@ import graft.operators.UserJourneys
   */
 object StreamingJourneys {
 
-  def scd2Sink(events: DataFrame, userCol: String, tsCol: String,
-               stateCol: String, tieCol: String, table: String,
-               checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processScd2Batch(batch, userCol, tsCol, stateCol, tieCol, table)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** One micro-batch's fold (factored out for the gated query and
-    * batch-ingest callers). localCheckpoint before the overwrite so
-    * the job never scans the table it replaces; orphaned warehouse
-    * dirs from another JVM are healed before the first CREATE. */
+    * batch-ingest callers), through [[StandingTable.fold]]. */
   def processScd2Batch(batch: DataFrame, userCol: String, tsCol: String,
                        stateCol: String, tieCol: String,
                        table: String): Unit = {
-    val spark = batch.sparkSession
     if (batch.isEmpty) return
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) graft.operators.Bucketing.dropManagedTable(spark, table)
-    val next =
-      if (exists)
-        UserJourneys.scd2Fold(spark.table(table), batch, userCol, tsCol,
-          stateCol, tieCol)
-      else
-        UserJourneys.scd2States(batch, userCol, tsCol, stateCol, tieCol)
-    next.localCheckpoint(true).write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table)
+    StandingTable.fold(batch.sparkSession, table) {
+      case Some(prior) => Some(UserJourneys.scd2Fold(prior, batch,
+        userCol, tsCol, stateCol, tieCol))
+      case None => Some(UserJourneys.scd2States(batch, userCol, tsCol,
+        stateCol, tieCol))
+    }
   }
 }

@@ -25,17 +25,6 @@ import graft.operators.Lakehouse
   * data). */
 object StreamingLakehouse {
 
-  def versionedSink(batches: DataFrame, path: String, key: String,
-                    buckets: Int, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processVersionedBatch(batch, batchId, path, key, buckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** One micro-batch's versioned commit (factored out for the gated
     * query). The first batch's upserts become v0; every later batch
     * merges as `max(version) + 1`. The writer token is derived from

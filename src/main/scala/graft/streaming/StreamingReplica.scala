@@ -32,45 +32,22 @@ object StreamingReplica {
 
   private val Marker = "_graft_cdf_applied"
 
-  private type Fs = org.apache.hadoop.fs.FileSystem
-
-  private def fsOf(df: DataFrame, path: String): Fs =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-
   /** The replica's applied-version marker; None before the first
     * apply (bootstrap pending). */
   def appliedVersion(spark: org.apache.spark.sql.SparkSession,
-                     replica: String): Option[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(replica)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(replica, Marker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .trim.toLong)
-      finally in.close()
-    }
-  }
-
-  private def publishApplied(fs: Fs, replica: String, v: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(replica, Marker)
-    val tmp = new org.apache.hadoop.fs.Path(replica, Marker + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"marker publish failed at $p")
-  }
+                     replica: String): Option[Long] =
+    SmallFile.read(new org.apache.hadoop.fs.Path(replica)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration),
+      replica, Marker).map(_.trim.toLong)
 
   /** One subscriber tick (factored out for the gated query and the
     * drills): catch the replica up to the source head. Bootstrap (no
     * marker yet) snapshots the source at `bootstrapVersion` into a
     * fresh plain store — after which every later version arrives as a
     * diff. Returns the number of versions applied this tick (0 = the
-    * replica was already at head). */
+    * replica was already at head). As a standing subscription, any
+    * trigger stream drives it through [[ForeachBatchSink.start]]; the
+    * batch content is ignored, arrival is the signal. */
   def processTick(spark: org.apache.spark.sql.SparkSession,
                   srcPath: String, replica: String, key: String,
                   buckets: Int, bootstrapVersion: Long = 0L): Long = {
@@ -86,7 +63,7 @@ object StreamingReplica {
           Lakehouse.readVersioned(spark, srcPath, bootstrapVersion)
             .drop("bucket"),
           key, replica, buckets)
-        publishApplied(fs, replica, bootstrapVersion)
+        SmallFile.publish(fs, replica, Marker, bootstrapVersion.toString)
         bootstrapVersion
     }
     var n = 0L
@@ -100,25 +77,10 @@ object StreamingReplica {
         (col(key) +: when(col("change") === "removed", lit("D"))
           .otherwise(lit("U")).as("op") +: dataCols.map(col)): _*)
       Lakehouse.mergeInto(spark, replica, mb, key, buckets)
-      publishApplied(fs, replica, v)
+      SmallFile.publish(fs, replica, Marker, v.toString)
       applied = v
       n += 1
     }
     n
   }
-
-  /** The subscriber as a standing streaming sink: any trigger stream
-    * drives the poll loop (the batch content is ignored — arrival IS
-    * the signal). */
-  def subscriberSink(ticks: DataFrame, srcPath: String, replica: String,
-                     key: String, buckets: Int, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    ticks.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processTick(batch.sparkSession, srcPath, replica, key, buckets)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
 }

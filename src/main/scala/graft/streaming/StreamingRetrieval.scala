@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming BM25 indexer: each micro-batch's documents tokenize into
@@ -16,34 +16,18 @@ import org.apache.spark.sql.functions._
   */
 object StreamingRetrieval {
 
-  def postingsSink(docs: DataFrame, idCol: String, textCol: String,
-                   table: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processPostingsBatch(batch, idCol, textCol, table)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** One micro-batch's upsert (factored out for the gated query). */
   def processPostingsBatch(batch: DataFrame, idCol: String,
                            textCol: String, table: String): Unit = {
-    val spark = batch.sparkSession
     if (batch.isEmpty) return
     val bs = graft.operators.Retrieval
       .buildPostings(batch, idCol, textCol).localCheckpoint(true)
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) graft.operators.Bucketing.dropManagedTable(spark, table)
-    val merged =
-      if (exists)
-        spark.table(table)
-          .join(bs.select(col("doc_id")).distinct(), Seq("doc_id"),
-            "left_anti")
-          .unionByName(bs)
-      else bs
-    merged.localCheckpoint(true).write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table)
+    StandingTable.fold(batch.sparkSession, table) {
+      case Some(prior) => Some(prior
+        .join(bs.select(col("doc_id")).distinct(), Seq("doc_id"),
+          "left_anti")
+        .unionByName(bs))
+      case None => Some(bs)
+    }
   }
 }

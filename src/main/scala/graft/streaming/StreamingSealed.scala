@@ -203,18 +203,6 @@ object StreamingSealed {
     m.toMap
   }
 
-  def sealedSink(batches: DataFrame, root: String, budgetBytes: Long,
-                 checkpointDir: String, userBuckets: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSealedBatch(batch, batchId, root, budgetBytes,
-          userBuckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** One micro-batch of the sealed export (factored out for the
     * gated query and the crash drills). `userBuckets` is the `ub`
     * landing fan-out — it must stay CONSTANT for the life of a store

@@ -29,16 +29,6 @@ import graft.operators.Sft
   */
 object StreamingSft {
 
-  def sftSink(events: DataFrame, table: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSftBatch(batch, batchId, table)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   private def turnRow(turns: DataFrame): DataFrame =
     turns.select(col("user_id"), col("session_id"), col("turn_id"),
       col("role"), col("n_events"), col("value_fp"), col("turn_text"))

@@ -67,14 +67,8 @@ object StreamingShards {
     * batch) would be trusting garbage over the dirs. Missing-shaped
     * `None` routes every such case into the heal-by-scan path. */
   private def readSidecar(fs: org.apache.hadoop.fs.FileSystem, path: String)
-      : Option[Map[Long, (Long, Long, Long, Long)]] = {
-    val p = new org.apache.hadoop.fs.Path(path, SidecarName)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
+      : Option[Map[Long, (Long, Long, Long, Long)]] =
+    SmallFile.read(fs, path, SidecarName).flatMap { txt =>
       scala.util.Try {
         txt.linesIterator.filter(_.nonEmpty).map { l =>
           val Array(s, mn, mx, n, t) = l.split(",")
@@ -82,26 +76,15 @@ object StreamingShards {
         }.toMap
       }.toOption.filter(_.nonEmpty)
     }
-  }
 
-  /** Atomic publish: write to a temp path, then rename over the old
-    * file. A crash mid-write leaves either the prior sidecar intact
-    * or (in the delete→rename window) no sidecar — both states
-    * [[readSidecar]] handles; an in-place truncating write could
-    * leave a torn file that misreports the landed layout. */
+  /** Publish through [[SmallFile.publish]] (temp file + rename): an
+    * in-place truncating write could leave a torn file that misreports
+    * the landed layout. */
   private def writeSidecar(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                           stats: Map[Long, (Long, Long, Long, Long)]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, SidecarName)
-    val tmp = new org.apache.hadoop.fs.Path(path, SidecarName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(stats.toSeq.sortBy(_._1)
+                           stats: Map[Long, (Long, Long, Long, Long)]): Unit =
+    SmallFile.publish(fs, path, SidecarName, stats.toSeq.sortBy(_._1)
       .map { case (s, (mn, mx, n, t)) => s"$s,$mn,$mx,$n,$t" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"sidecar publish failed: $tmp -> $p")
-  }
+      .mkString("", "\n", "\n"))
 
   /** Recompute sidecar entries for `shards` only (bounded rescan);
     * entries for vanished dirs are dropped. Returns the new stats. */
@@ -185,165 +168,160 @@ object StreamingShards {
                    writeFull: DataFrame => Unit,
                    append: (DataFrame, Option[(Long, Long)]) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val hp = new org.apache.hadoop.fs.Path(path)
-          val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val shardsOnDisk = if (fs.exists(hp)) listShards(fs, path)
-            else Set.empty[Long]
-          if (shardsOnDisk.isEmpty) {
-            writeFull(batch)
-            refreshSidecar(spark, fs, path, idCol, Map.empty,
-              listShards(fs, path))
-          } else {
-            // heal a missing (or torn — see readSidecar) sidecar with
-            // one full scan, then probe only the shards a batch id
-            // could possibly live in
-            val stats0 = readSidecar(fs, path).getOrElse(
-              refreshSidecar(spark, fs, path, idCol, Map.empty, shardsOnDisk))
-            val ids = batch.select(col(idCol)).distinct()
+    ForeachBatchSink.start(docs, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val hp = new org.apache.hadoop.fs.Path(path)
+        val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val shardsOnDisk = if (fs.exists(hp)) listShards(fs, path)
+          else Set.empty[Long]
+        if (shardsOnDisk.isEmpty) {
+          writeFull(batch)
+          refreshSidecar(spark, fs, path, idCol, Map.empty,
+            listShards(fs, path))
+        } else {
+          // heal a missing (or torn — see readSidecar) sidecar with
+          // one full scan, then probe only the shards a batch id
+          // could possibly live in
+          val stats0 = readSidecar(fs, path).getOrElse(
+            refreshSidecar(spark, fs, path, idCol, Map.empty, shardsOnDisk))
+          val ids = batch.select(col(idCol)).distinct()
+            .localCheckpoint(true)
+          val b = ids.agg(min(col(idCol)).cast("long"), count(lit(1))).head()
+          val (bMin, nBatch) = (b.getLong(0), b.getLong(1))
+          val lastShard =
+            if (stats0.nonEmpty) stats0.maxBy(_._2._2)._1 else -1L
+          val probeShards = (shardsOnDisk -- stats0.keySet) ++
+            stats0.filter(_._2._2 >= bMin).keySet ++
+            (if (stats0.nonEmpty) Set(lastShard) else Set.empty[Long])
+          val probed =
+            if (probeShards.isEmpty) null
+            else spark.read.option("basePath", path)
+              .parquet(probeShards.toSeq.map(s => s"$path/shard_id=$s"): _*)
+              .select(col(idCol), col("shard_id").cast("long").as("shard_id"))
               .localCheckpoint(true)
-            val b = ids.agg(min(col(idCol)).cast("long"), count(lit(1))).head()
-            val (bMin, nBatch) = (b.getLong(0), b.getLong(1))
-            val lastShard =
-              if (stats0.nonEmpty) stats0.maxBy(_._2._2)._1 else -1L
-            val probeShards = (shardsOnDisk -- stats0.keySet) ++
-              stats0.filter(_._2._2 >= bMin).keySet ++
-              (if (stats0.nonEmpty) Set(lastShard) else Set.empty[Long])
-            val probed =
-              if (probeShards.isEmpty) null
-              else spark.read.option("basePath", path)
+          // Staleness audit before trusting ANY total: an append that
+          // crashed after landing files but before its sidecar refresh
+          // leaves dirs the sidecar has not seen, or a last shard
+          // holding ids past its recorded max. The membership probe
+          // still classifies correctly (untracked dirs and the
+          // recorded-last shard are always probed), but totals derived
+          // from the stale record would place the next append at a
+          // wrong global offset — and the replay-skip path would
+          // otherwise leave the staleness standing forever. Compare
+          // observed (max_id, n_docs) of the probed dirs with the
+          // record and re-scan exactly the disagreeing shards.
+          val stats = {
+            val observed = if (probed == null) Array.empty[(Long, (Long, Long))]
+              else probed.groupBy(col("shard_id"))
+                .agg(max(col(idCol)).cast("long"), count(lit(1)))
+                .collect()
+                .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+            val stale = observed.collect { case (s, (mx, n))
+              if !stats0.get(s).exists(st => st._2 == mx && st._3 == n) => s
+            }.toSet
+            if (stale.isEmpty) stats0
+            else refreshSidecar(spark, fs, path, idCol, stats0, stale)
+          }
+          val hit =
+            if (probed == null) ids.limit(0)
+              .withColumn("shard_id", lit(0L))
+            else probed.join(ids, Seq(idCol), "left_semi")
+              .localCheckpoint(true)
+          val nHit = hit.count()
+          if (nHit == nBatch) {
+            // every id already landed: a replayed micro-batch —
+            // its bytes are on disk, skip
+          } else {
+            val current = if (nHit > 0L) {
+              // Partial overlap. Before touching ANY file, prove it
+              // is a crashed append suffix (every batch id follows
+              // every landed NON-batch id): a producer re-sending
+              // genuinely old ids must die loudly here, not after a
+              // destructive strip. Unprobed shards hold only ids
+              // < bMin (that is why they were skipped), so the
+              // check needs one bounded scan of the probed dirs.
+              val probedNonBatch = spark.read.option("basePath", path)
                 .parquet(probeShards.toSeq.map(s => s"$path/shard_id=$s"): _*)
-                .select(col(idCol), col("shard_id").cast("long").as("shard_id"))
+                .join(ids, Seq(idCol), "left_anti")
+                .agg(max(col(idCol)).cast("long")).head()
+              val unprobedMax = (stats -- probeShards).values
+                .map(_._2).maxOption.getOrElse(Long.MinValue)
+              val maxNonBatch = math.max(unprobedMax,
+                if (probedNonBatch.isNullAt(0)) Long.MinValue
+                else probedNonBatch.getLong(0))
+              require(bMin > maxNonBatch,
+                s"batch partially overlaps landed ids ($nHit of $nBatch " +
+                  s"landed) but is NOT an id-suffix (batch min $bMin <= " +
+                  s"landed non-batch max $maxNonBatch): neither a replay " +
+                  "nor a crashed append — refusing to repair")
+              // crashed mid-append: strip the batch's landed rows
+              // from their shards (restores the pre-append state —
+              // overwrite lands whole dirs, ids are append-only),
+              // then fall through to a clean re-append
+              val dirty = hit.select(col("shard_id")).distinct()
+                .collect().map(_.getLong(0))
+              val survivors = spark.read.option("basePath", path)
+                .parquet(dirty.toSeq.map(s => s"$path/shard_id=$s"): _*)
+                .join(ids, Seq(idCol), "left_anti")
+                .withColumn("shard_id", col("shard_id").cast("long"))
                 .localCheckpoint(true)
-            // Staleness audit before trusting ANY total: an append that
-            // crashed after landing files but before its sidecar refresh
-            // leaves dirs the sidecar has not seen, or a last shard
-            // holding ids past its recorded max. The membership probe
-            // still classifies correctly (untracked dirs and the
-            // recorded-last shard are always probed), but totals derived
-            // from the stale record would place the next append at a
-            // wrong global offset — and the replay-skip path would
-            // otherwise leave the staleness standing forever. Compare
-            // observed (max_id, n_docs) of the probed dirs with the
-            // record and re-scan exactly the disagreeing shards.
-            val stats = {
-              val observed = if (probed == null) Array.empty[(Long, (Long, Long))]
-                else probed.groupBy(col("shard_id"))
-                  .agg(max(col(idCol)).cast("long"), count(lit(1)))
-                  .collect()
-                  .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
-              val stale = observed.collect { case (s, (mx, n))
-                if !stats0.get(s).exists(st => st._2 == mx && st._3 == n) => s
-              }.toSet
-              if (stale.isEmpty) stats0
-              else refreshSidecar(spark, fs, path, idCol, stats0, stale)
-            }
-            val hit =
-              if (probed == null) ids.limit(0)
-                .withColumn("shard_id", lit(0L))
-              else probed.join(ids, Seq(idCol), "left_semi")
-                .localCheckpoint(true)
-            val nHit = hit.count()
-            if (nHit == nBatch) {
-              // every id already landed: a replayed micro-batch —
-              // its bytes are on disk, skip
-            } else {
-              val current = if (nHit > 0L) {
-                // Partial overlap. Before touching ANY file, prove it
-                // is a crashed append suffix (every batch id follows
-                // every landed NON-batch id): a producer re-sending
-                // genuinely old ids must die loudly here, not after a
-                // destructive strip. Unprobed shards hold only ids
-                // < bMin (that is why they were skipped), so the
-                // check needs one bounded scan of the probed dirs.
-                val probedNonBatch = spark.read.option("basePath", path)
-                  .parquet(probeShards.toSeq.map(s => s"$path/shard_id=$s"): _*)
-                  .join(ids, Seq(idCol), "left_anti")
-                  .agg(max(col(idCol)).cast("long")).head()
-                val unprobedMax = (stats -- probeShards).values
-                  .map(_._2).maxOption.getOrElse(Long.MinValue)
-                val maxNonBatch = math.max(unprobedMax,
-                  if (probedNonBatch.isNullAt(0)) Long.MinValue
-                  else probedNonBatch.getLong(0))
-                require(bMin > maxNonBatch,
-                  s"batch partially overlaps landed ids ($nHit of $nBatch " +
-                    s"landed) but is NOT an id-suffix (batch min $bMin <= " +
-                    s"landed non-batch max $maxNonBatch): neither a replay " +
-                    "nor a crashed append — refusing to repair")
-                // crashed mid-append: strip the batch's landed rows
-                // from their shards (restores the pre-append state —
-                // overwrite lands whole dirs, ids are append-only),
-                // then fall through to a clean re-append
-                val dirty = hit.select(col("shard_id")).distinct()
-                  .collect().map(_.getLong(0))
-                val survivors = spark.read.option("basePath", path)
-                  .parquet(dirty.toSeq.map(s => s"$path/shard_id=$s"): _*)
-                  .join(ids, Seq(idCol), "left_anti")
-                  .withColumn("shard_id", col("shard_id").cast("long"))
-                  .localCheckpoint(true)
-                val keep = survivors.select(col("shard_id")).distinct()
-                  .collect().map(_.getLong(0)).toSet
-                if (keep.nonEmpty)
-                  survivors
-                    .repartition(col("shard_id"))
-                    .sortWithinPartitions(col("shard_id"), col(idCol))
-                    .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("shard_id")
-                    .parquet(path)
-                (dirty.toSet -- keep).foreach { s =>
-                  fs.delete(
-                    new org.apache.hadoop.fs.Path(path, s"shard_id=$s"), true)
-                }
-                // the strip (and the crash before it) invalidated the
-                // sidecar for exactly the probed/dirty shards — a
-                // bounded refresh makes the totals below exact
-                refreshSidecar(spark, fs, path, idCol, stats,
-                  probeShards ++ dirty)
-              } else stats
-              // "empty" gates a from-scratch overwrite that deletes
-              // every landed shard — never take a record's word for
-              // it: re-list the dirs, and if any remain (a sidecar
-              // that lost track of a live layout), heal by full
-              // rescan instead of destroying data
-              val remaining0 = if (current.isEmpty) listShards(fs, path)
-                else Set.empty[Long]
-              val healed = if (current.isEmpty && remaining0.nonEmpty)
-                refreshSidecar(spark, fs, path, idCol, Map.empty, remaining0)
-              else current
-              if (healed.isEmpty) {
-                // the strip emptied the whole layout (the crashed
-                // batch WAS the corpus): recreate from scratch
-                writeFull(batch)
-                refreshSidecar(spark, fs, path, idCol, Map.empty,
-                  listShards(fs, path))
-              } else {
-                // landed totals from the sidecar — the append skips
-                // its full-layout scan, so append cost is ∝ touched
-                // shards, not the corpus
-                val totals = Some((healed.values.map(_._4).sum,
-                  healed.values.map(_._2).max))
-                append(batch, totals)
-                // bounded refresh: new dirs + everything the batch's
-                // id span can have touched + the last pre-append
-                // shard (the one existing dir an append rewrites —
-                // skipping it leaves a stale range that would make the
-                // NEXT replay probe miss those landed ids)
-                val after = listShards(fs, path)
-                refreshSidecar(spark, fs, path, idCol, healed,
-                  (after -- healed.keySet) ++
-                    healed.filter(_._2._2 >= bMin).keySet ++
-                    Set(healed.maxBy(_._2._2)._1))
+              val keep = survivors.select(col("shard_id")).distinct()
+                .collect().map(_.getLong(0)).toSet
+              if (keep.nonEmpty)
+                survivors
+                  .repartition(col("shard_id"))
+                  .sortWithinPartitions(col("shard_id"), col(idCol))
+                  .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                  .option("partitionOverwriteMode", "dynamic")
+                  .partitionBy("shard_id")
+                  .parquet(path)
+              (dirty.toSet -- keep).foreach { s =>
+                fs.delete(
+                  new org.apache.hadoop.fs.Path(path, s"shard_id=$s"), true)
               }
+              // the strip (and the crash before it) invalidated the
+              // sidecar for exactly the probed/dirty shards — a
+              // bounded refresh makes the totals below exact
+              refreshSidecar(spark, fs, path, idCol, stats,
+                probeShards ++ dirty)
+            } else stats
+            // "empty" gates a from-scratch overwrite that deletes
+            // every landed shard — never take a record's word for
+            // it: re-list the dirs, and if any remain (a sidecar
+            // that lost track of a live layout), heal by full
+            // rescan instead of destroying data
+            val remaining0 = if (current.isEmpty) listShards(fs, path)
+              else Set.empty[Long]
+            val healed = if (current.isEmpty && remaining0.nonEmpty)
+              refreshSidecar(spark, fs, path, idCol, Map.empty, remaining0)
+            else current
+            if (healed.isEmpty) {
+              // the strip emptied the whole layout (the crashed
+              // batch WAS the corpus): recreate from scratch
+              writeFull(batch)
+              refreshSidecar(spark, fs, path, idCol, Map.empty,
+                listShards(fs, path))
+            } else {
+              // landed totals from the sidecar — the append skips
+              // its full-layout scan, so append cost is ∝ touched
+              // shards, not the corpus
+              val totals = Some((healed.values.map(_._4).sum,
+                healed.values.map(_._2).max))
+              append(batch, totals)
+              // bounded refresh: new dirs + everything the batch's
+              // id span can have touched + the last pre-append
+              // shard (the one existing dir an append rewrites —
+              // skipping it leaves a stale range that would make the
+              // NEXT replay probe miss those landed ids)
+              val after = listShards(fs, path)
+              refreshSidecar(spark, fs, path, idCol, healed,
+                (after -- healed.keySet) ++
+                  healed.filter(_._2._2 >= bMin).keySet ++
+                  Set(healed.maxBy(_._2._2)._1))
             }
           }
         }
-        () // foreachBatch wants Unit; refreshSidecar returns the stats
       }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
+    }
 }

@@ -32,22 +32,18 @@ object StreamingShift {
     val snap = docs.sparkSession.table(refTable)
       .select(col("bucket").cast("long"), col("cnt").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          import s.implicits._
-          val ref = snap.toDF("bucket", "cnt")
-          Curation.jsShift(ref,
-              Curation.bucketProfile(batch, textCol, dim))
-            .select(lit(bid).as("batch_id"), col("n_old"), col("n_new"),
-              col("js"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(outTable)
-        }
+    ForeachBatchSink.start(docs, checkpointDir) { (batch, bid) =>
+      if (!batch.isEmpty) {
+        val s = batch.sparkSession
+        import s.implicits._
+        val ref = snap.toDF("bucket", "cnt")
+        Curation.jsShift(ref,
+            Curation.bucketProfile(batch, textCol, dim))
+          .select(lit(bid).as("batch_id"), col("n_old"), col("n_new"),
+            col("js"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .format("parquet").saveAsTable(outTable)
       }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
+    }
   }
 }

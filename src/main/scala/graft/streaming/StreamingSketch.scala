@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 import graft.functions.TextFunctions.tokens
@@ -20,25 +20,11 @@ import graft.functions.TextFunctions.tokens
   */
 object StreamingSketch {
 
-  /** Start the sketch-fold sink over a stream of (keyCol, textCol)
-    * documents. */
-  def kmvSink(docs: DataFrame, keyCol: String, textCol: String, k: Int,
-              table: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, keyCol, textCol, k, table)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** One micro-batch's fold (factored out for batch-ingest callers
     * and the gated query): batch sketch → union with the standing
     * table → kmvMerge per key → overwrite. The table is |keys| rows
-    * of ≤ k longs — rewriting it wholesale per batch IS the bounded
-    * design (localCheckpoint first so the overwrite never scans the
-    * table it replaces). */
+    * of ≤ k longs — rewriting it wholesale per batch
+    * ([[StandingTable.fold]]) IS the bounded design. */
   def processBatch(batch: DataFrame, keyCol: String, textCol: String,
                    k: Int, table: String): Unit = {
     val spark = batch.sparkSession
@@ -47,35 +33,12 @@ object StreamingSketch {
       batch.select(col(keyCol), explode(tokens(col(textCol))).as("__w"))
         .select(col(keyCol), Sketches.hash48(col("__w")).as("h")),
       keyCol, "h", k)
-    val merged =
-      if (spark.catalog.tableExists(table))
-        spark.table(table).unionByName(bs)
-          .groupBy(col(keyCol)).agg(Sketches.kmvMerge(col("hs"), k).as("hs"))
-      else {
-        // The session catalog is per-JVM but the warehouse dir is not:
-        // a table written by a previous JVM (or a crash before the
-        // catalog commit) leaves an orphaned location that wedges
-        // saveAsTable forever. Unreachable-via-catalog data carries no
-        // standing state we could merge, so heal by clearing it.
-        graft.operators.Bucketing.dropManagedTable(spark, table)
-        bs
-      }
-    merged.localCheckpoint(true).write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table)
+    StandingTable.fold(spark, table) {
+      case Some(prior) => Some(prior.unionByName(bs)
+        .groupBy(col(keyCol)).agg(Sketches.kmvMerge(col("hs"), k).as("hs")))
+      case None => Some(bs)
+    }
   }
-
-  /** Start the HLL register-fold sink over a stream of (keyCol,
-    * textCol) documents — 3-shingle grain. */
-  def hllSink(docs: DataFrame, keyCol: String, textCol: String,
-              p: Int, cap: Int, table: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processHllBatch(batch, keyCol, textCol, p, cap, table)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
 
   /** One micro-batch's HLL fold: batch register table → register-wise
     * max with the standing table → overwrite. Same idempotent-merge
@@ -93,29 +56,11 @@ object StreamingSketch {
             .as("__g"))
         .select(col(keyCol), Sketches.hash48(col("__g")).as("h")),
       keyCol, "h", p, cap)
-    val merged =
-      if (spark.catalog.tableExists(table))
-        Sketches.hllMergeRegs(spark.table(table), bs)
-      else {
-        graft.operators.Bucketing.dropManagedTable(spark, table)
-        bs
-      }
-    merged.localCheckpoint(true).write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table)
+    StandingTable.fold(spark, table) {
+      case Some(prior) => Some(Sketches.hllMergeRegs(prior, bs))
+      case None => Some(bs)
+    }
   }
-
-  /** Start the histogram fold sink: per-batch fixed-grid histograms
-    * fold into a standing cells table (quantile state at any rate). */
-  def histSink(docs: DataFrame, valCol: String, width: Int,
-               table: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processHistBatch(batch, valCol, width, table, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
 
   /** One micro-batch's histogram fold — the same linear-merge shape
     * as [[processCmsBatch]] (cell-wise sum, replay double-counts), so
@@ -128,36 +73,20 @@ object StreamingSketch {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
     val bs = Sketches.histogram(batch.select(col(valCol)), valCol, width)
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) graft.operators.Bucketing.dropManagedTable(spark, table)
-    val merged =
-      if (exists) {
-        val prior = spark.table(table)
-        if (!prior.filter(col("bucket") === -1L - batchId).isEmpty)
-          return // replay: already folded
-        prior.filter(col("bucket") >= 0L).unionByName(bs)
-          .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-          .unionByName(prior.filter(col("bucket") < 0L))
-      } else bs
-    merged
-      .unionByName(spark.range(1).select(lit(-1L - batchId).as("bucket"),
-        lit(1L).as("cnt")))
-      .localCheckpoint(true).write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table)
+    val ledgerRow = spark.range(1).select(lit(-1L - batchId).as("bucket"),
+      lit(1L).as("cnt"))
+    StandingTable.fold(spark, table) {
+      case Some(prior) if !prior.filter(col("bucket") === -1L - batchId)
+          .isEmpty =>
+        None // replay: already folded
+      case Some(prior) => Some(prior.filter(col("bucket") >= 0L)
+        .unionByName(bs)
+        .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
+        .unionByName(prior.filter(col("bucket") < 0L))
+        .unionByName(ledgerRow))
+      case None => Some(bs.unionByName(ledgerRow))
+    }
   }
-
-  /** Start the Count-Min fold sink: per-batch token frequencies fold
-    * into a standing depth·width-cell sketch table. */
-  def cmsSink(docs: DataFrame, textCol: String, depth: Int, width: Int,
-              table: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processCmsBatch(batch, textCol, depth, width, table, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
 
   /** One micro-batch's Count-Min fold. CMS merge is cell-wise SUM —
     * linear, NOT idempotent — so unlike [[processBatch]]'s KMV union,
@@ -178,22 +107,17 @@ object StreamingSketch {
       .select(explode(tokens(col(textCol))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__c"))
     val bs = Sketches.cmsSketch(tf, "__w", "__c", depth, width)
-    val exists = spark.catalog.tableExists(table)
-    // heal an orphaned warehouse dir (see processBatch) before a CREATE
-    if (!exists) graft.operators.Bucketing.dropManagedTable(spark, table)
-    val merged =
-      if (exists) {
-        val prior = spark.table(table)
-        val landed = !prior
-          .filter(col("row") === -1L && col("bucket") === batchId).isEmpty
-        if (landed) return // replay: already folded — skip, don't re-sum
+    val ledgerRow = spark.range(1).select(lit(-1L).as("row"),
+      lit(batchId).as("bucket"), lit(1L).as("cell"))
+    StandingTable.fold(spark, table) {
+      case Some(prior) if !prior
+          .filter(col("row") === -1L && col("bucket") === batchId).isEmpty =>
+        None // replay: already folded — skip, don't re-sum
+      case Some(prior) => Some(
         Sketches.cmsMergeCells(prior.filter(col("row") >= 0L), bs)
           .unionByName(prior.filter(col("row") === -1L))
-      } else bs
-    merged
-      .unionByName(spark.range(1).select(lit(-1L).as("row"),
-        lit(batchId).as("bucket"), lit(1L).as("cell")))
-      .localCheckpoint(true).write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table)
+          .unionByName(ledgerRow))
+      case None => Some(bs.unionByName(ledgerRow))
+    }
   }
 }

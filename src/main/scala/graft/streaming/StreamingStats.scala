@@ -24,18 +24,6 @@ import graft.operators.StatsStore
   * relevant batches ([[StatsStore.readRange]]). */
 object StreamingStats {
 
-  def statsSink(events: DataFrame, path: String, key: String,
-                buckets: Int, statCols: Seq[String],
-                checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processStatsBatch(batch, batchId, path, key, buckets, statCols)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** One micro-batch (factored out for the gated query and drills):
     * an empty batch commits nothing; everything else is
     * [[StatsStore.appendBatch]]'s exactly-once contract. */

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextFunctions
 import graft.operators.Bpe
 
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -275,7 +275,7 @@ class BpeSpec extends AnyFunSuite {
     import graft.streaming.StreamingBpe
     for (t <- Seq("graft_bpe_sink_merges", "bpe_enc_out"))
       Bucketing.dropManagedTable(spark, t)
-    val base = java.nio.file.Files.createTempDirectory("bpesink").toString
+    val base = tempDir("bpesink")
     val merges = Seq(("a", "b"), ("ab", "ab"))
     Bpe.saveMerges(spark, "graft_bpe_sink_merges", merges)
     val rows = Seq((0L, "abab xy"), (1L, "ababab b"), (2L, "abc"))
@@ -298,12 +298,8 @@ class BpeSpec extends AnyFunSuite {
     assert(table().toSet == batch) // stream == batch, byte for byte
     // crash drill: batch 0 wrote but its offset never committed —
     // prune the checkpoint and restart; the sink re-appends batch 0
-    def prune(dir: String, keep: String => Boolean): Unit =
-      new java.io.File(s"$base/ckpt/$dir").listFiles().toSeq
-        .filterNot(f => keep(f.getName.stripPrefix(".").stripSuffix(".crc")))
-        .foreach(f => assert(f.delete(), f.toString))
-    prune("commits", _ => false)
-    prune("offsets", _ == "0")
+    prune(s"$base/ckpt", "commits", _ => false)
+    prune(s"$base/ckpt", "offsets", _ == "0")
     val q2 = start(); q2.processAllAvailable(); q2.stop()
     spark.catalog.refreshTable("bpe_enc_out")
     val replayed = table()
@@ -319,7 +315,7 @@ class BpeSpec extends AnyFunSuite {
     import graft.streaming.StreamingBpe
     for (t <- Seq("graft_bpe_dec_vocab", "bpe_dec_out"))
       Bucketing.dropManagedTable(spark, t)
-    val base = java.nio.file.Files.createTempDirectory("bpedec").toString
+    val base = tempDir("bpedec")
     // char-mode corpus with ▁ word-boundary marking (q138 semantics):
     // encode to ids against the marked vocab, save the vocab, stream
     // the id sequences through the decode sink, get the text back

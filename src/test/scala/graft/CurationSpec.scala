@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Curation
 
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -375,7 +375,7 @@ class CurationSpec extends AnyFunSuite {
       Bucketing.dropManagedTable(spark, t)
     Curation.bucketProfile(oldDocs.toDF("doc_id", "text"), "text", 64)
       .write.format("parquet").saveAsTable("graft_shift_ref")
-    val base = java.nio.file.Files.createTempDirectory("shift").toString
+    val base = tempDir("shift")
     val mem = MemoryStream[(Long, String)]
     val q = StreamingShift.shiftSink(mem.toDF().toDF("doc_id", "text"),
       "graft_shift_ref", "shift_out", "text", 64, s"$base/ckpt")
@@ -741,7 +741,7 @@ class CurationSpec extends AnyFunSuite {
     import graft.streaming.StreamingClassify
     for (t <- Seq("nb_weights_sink", "nb_pred_out"))
       Bucketing.dropManagedTable(spark, t)
-    val base = java.nio.file.Files.createTempDirectory("nbsink").toString
+    val base = tempDir("nbsink")
     val train = Seq((0L, "aa aa"), (1L, "bb bb"), (2L, "cc cc"))
       .toDF("doc_id", "text")
     val labels = Seq((0L, "de"), (1L, "en"), (2L, "fr")).toDF("doc_id", "y")

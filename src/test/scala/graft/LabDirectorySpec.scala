@@ -7,14 +7,13 @@ import graft.sources.{LabDirectory, MccSource, StaSource}
 /** Fleet-scale directory ingest: executor-distributed parse of the
   * same files the single-file loaders handle, with identical schema
   * and metadata per file. */
-class LabDirectorySpec extends AnyFunSuite {
+class LabDirectorySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val staDir = "/root/reference/tests/test_files/STA"
   private val mccDir = "/root/reference/tests/test_files/MCC"
 
   private def tempDirWithCopies(src: String, n: Int): String = {
-    val dir = Files.createTempDirectory("labdir").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tempDir("labdir"))
     val name = Paths.get(src).getFileName.toString
     (1 to n).foreach { i =>
       Files.copy(Paths.get(src),

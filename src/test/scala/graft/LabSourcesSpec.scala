@@ -8,7 +8,7 @@ import graft.sources._
   * values captured from the reference's OBSERVED behavior (running
   * labetl on the same fixtures), including the full file_metadata
   * JSON byte-for-byte. */
-class LabSourcesSpec extends AnyFunSuite {
+class LabSourcesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private val staVal = "/root/reference/tests/test_files/STA/DF_FILED_VAL_STA_N2_10K_240211_R1.csv"
@@ -103,7 +103,7 @@ class LabSourcesSpec extends AnyFunSuite {
 
   test("parquet sink round-trips data, units, and table metadata") {
     val t = LabEtl.loadMccData(spark, mcc)
-    val out = java.nio.file.Files.createTempDirectory("labtbl").toString + "/mcc"
+    val out = tempDir("labtbl") + "/mcc"
     t.write(out)
     val back = LabTable.read(spark, out)
     assert(back.df.count() == 2584)
@@ -115,7 +115,7 @@ class LabSourcesSpec extends AnyFunSuite {
   test("parquet footer carries file_metadata/type keys byte-identically") {
     import graft.sources.ParquetFooter
     val t = LabEtl.loadMccData(spark, mcc)
-    val out = java.nio.file.Files.createTempDirectory("labftr").toString + "/mcc"
+    val out = tempDir("labftr") + "/mcc"
     t.write(out)
     val part = new java.io.File(out).listFiles()
       .find(f => f.getName.endsWith(".parquet")).get

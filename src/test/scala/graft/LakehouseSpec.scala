@@ -8,15 +8,9 @@ import graft.operators.{ConcurrentCommitException, Graph, Lakehouse, StatsStore}
 /** [[Lakehouse]] physical contracts the SQL gate cannot see (bytes
   * and mtimes on disk), plus [[Graph.labelPropagation]] against the
   * naive synchronous recurrence. */
-class LakehouseSpec extends AnyFunSuite {
+class LakehouseSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def freshDir(prefix: String): String = {
-    val p = Files.createTempDirectory(prefix)
-    Files.delete(p)
-    p.toString
-  }
 
   private def docsDf(ids: Seq[Long]) =
     ids.map(i => (i, s"text $i body", "en", s"src${i % 3}", 10L + i))
@@ -586,7 +580,7 @@ class LakehouseSpec extends AnyFunSuite {
     // manifest back to its pre-commit bytes — v1's data dir remains
     // as an orphan the manifest knows nothing about
     val manifestDir = Paths.get(path, "_manifest")
-    val snapshot = Files.createTempDirectory("graft_mansnap")
+    val snapshot = Paths.get(tempDir("graft_mansnap"))
     Files.list(manifestDir).forEach { p =>
       Files.copy(p, snapshot.resolve(p.getFileName.toString))
     }
@@ -1217,15 +1211,18 @@ class LakehouseSpec extends AnyFunSuite {
       == 1L)
     assert(stateOf(rep) == expect1)
     // a second source commit, then the REAL stream (a tick source
-    // driving subscriberSink) catches the replica up
+    // driving processTick through the sink adapter) catches the
+    // replica up
     val b2 = Seq((4L, "U", "text 4 v2", "en", "srcY", 44L))
       .toDF("doc_id", "op", "text", "lang", "source", "n_chars")
     Lakehouse.mergeVersioned(spark, src, 2L, b2, "doc_id", 4)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Long]
-    val q = StreamingReplica.subscriberSink(mem.toDF(), src, rep,
-      "doc_id", 4, freshDir("graft_repckpt"))
+    val q = graft.streaming.ForeachBatchSink.start(mem.toDF(),
+        freshDir("graft_repckpt")) { (batch, _) =>
+      StreamingReplica.processTick(batch.sparkSession, src, rep, "doc_id", 4)
+    }
     mem.addData(1L); q.processAllAvailable(); q.stop()
     assert(stateOf(rep) == expect1 + (4L -> "srcY"))
     assert(StreamingReplica.appliedVersion(spark, rep).contains(2L))
@@ -1332,12 +1329,14 @@ class LakehouseSpec extends AnyFunSuite {
     "the stats ledger (real stream), and range skipping serves the " +
     "live store") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamingStats
+    import graft.streaming.{ForeachBatchSink, StreamingStats}
     implicit val sqlCtx = spark.sqlContext
     val path = freshDir("graft_sstrm")
     val mem = MemoryStream[(Long, Long)]
-    val q = StreamingStats.statsSink(mem.toDF().toDF("k", "v"), path,
-      "k", 2, Seq("v"), freshDir("graft_sstrmck"))
+    val q = ForeachBatchSink.start(mem.toDF().toDF("k", "v"),
+        freshDir("graft_sstrmck")) { (batch, batchId) =>
+      StreamingStats.processStatsBatch(batch, batchId, path, "k", 2, Seq("v"))
+    }
     mem.addData((0L until 100L).map(i => (i, i)): _*)
     q.processAllAvailable()
     mem.addData((100L until 200L).map(i => (i, 1000L + i)): _*)

@@ -6,7 +6,7 @@ import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal._
 import graft.operators.Similarity
 
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -323,7 +323,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("mixed-format landing dir decodes distributed via the same pipeline") {
-    val dir = java.nio.file.Files.createTempDirectory("mixed")
+    val dir = java.nio.file.Paths.get(tempDir("mixed"))
     java.nio.file.Files.write(dir.resolve("m0.bmp"), bmpFixture)
     java.nio.file.Files.write(dir.resolve("m1.ppm"), ppmFixture)
     java.nio.file.Files.write(dir.resolve("m2.grft"),
@@ -339,7 +339,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("binaryFile ingest reads a media landing dir on executors") {
-    val dir = java.nio.file.Files.createTempDirectory("media")
+    val dir = java.nio.file.Paths.get(tempDir("media"))
     corpus(3).collect().foreach { r =>
       java.nio.file.Files.write(dir.resolve(s"m${r.media_id}.grft"), r.content)
     }
@@ -493,8 +493,7 @@ class MultimodalSpec extends AnyFunSuite {
     val media = Seq.tabulate(12) { i =>
       (i.toLong, Array.tabulate[Byte](16)(j => ((i * 7 + j) % 127).toByte))
     }.toDF("media_id", "content")
-    val path = java.nio.file.Files.createTempDirectory("graft_store_spec")
-      .toString + "/store"
+    val path = tempDir("graft_store_spec") + "/store"
     MediaStore.writeAll(media, "media_id", path, buckets = 4)
     def snap(b: Int): Map[String, (Long, Long, String)] = {
       val dir = new java.io.File(s"$path/bucket=$b")

@@ -6,7 +6,7 @@ import graft.operators.{BloomPrune, Bucketing}
 
 /** Scale-path techniques: bucketed co-located joins (zero-exchange)
   * and Bloom-filter join pruning. */
-class ScaleOpsSpec extends AnyFunSuite {
+class ScaleOpsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -419,7 +419,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("partitioned write: reads prune to the matching partition dirs") {
     val ev = Tables.t(spark, sf, "events")
-    val out = java.nio.file.Files.createTempDirectory("parted").toString + "/events"
+    val out = tempDir("parted") + "/events"
     // hive-style layout on the natural coarse key — at 100 TB this is
     // date/type partitioning; a filtered read must touch only its dirs
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)

@@ -10,7 +10,7 @@ import graft.functions.DecayedSumFixed
   * merging, template bytes, ledger rule order, preference tie-breaks,
   * mask-span arithmetic — plus the native decayed-sum window function
   * against the naive recurrence and [[Trend.psiDrift]] invariants. */
-class SftSpec extends AnyFunSuite {
+class SftSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -198,11 +198,27 @@ class SftSpec extends AnyFunSuite {
     }
   }
 
-  private def freshDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    java.nio.file.Files.delete(p)
-    p.toString
-  }
+  /** The sealed-export drills' three batches. u1 sessions at sec
+    * 0-20, 5000-5020, 9100; u2 at 100-120, 6000, 12000; u3 at 9000.
+    * Slice watermarks seal exactly two new conversations per batch;
+    * u2's 12000 session never seals. */
+  private val sealedRows = Seq(
+    (1L, 0L, 1L, "click", 1.0), (2L, 10L, 1L, "view", 1.0),
+    (3L, 20L, 1L, "purchase", 1.0),
+    (4L, 100L, 2L, "click", 1.0), (5L, 120L, 2L, "view", 1.0),
+    (6L, 5000L, 1L, "click", 1.0), (7L, 5020L, 1L, "error", 1.0),
+    (8L, 6000L, 2L, "signup", 1.0),
+    (9L, 9000L, 3L, "click", 1.0),
+    (10L, 9100L, 1L, "view", 1.0),
+    (11L, 12000L, 2L, "click", 1.0))
+  private def sealedSlice(b: Int) = events(sealedRows.filter { r =>
+    val cut0 = 5020L; val cut1 = 9100L
+    b match {
+      case 0 => r._2 <= cut0
+      case 1 => r._2 > cut0 && r._2 <= cut1
+      case _ => r._2 > cut1
+    }
+  })
 
   test("StreamingSealed: a drilled run (torn export healed by " +
     "inventory diff, batch redelivered after a later one) lands " +
@@ -210,26 +226,6 @@ class SftSpec extends AnyFunSuite {
     "conversations export per batch; unsealed ones never do") {
     import java.nio.file.{Files, Paths}
     import graft.streaming.StreamingSealed.processSealedBatch
-    // u1 sessions at sec 0-20, 5000-5020, 9100; u2 at 100-120, 6000,
-    // 12000; u3 at 9000. Slice watermarks seal exactly two new
-    // conversations per batch; u2's 12000 session never seals.
-    val rows = Seq(
-      (1L, 0L, 1L, "click", 1.0), (2L, 10L, 1L, "view", 1.0),
-      (3L, 20L, 1L, "purchase", 1.0),
-      (4L, 100L, 2L, "click", 1.0), (5L, 120L, 2L, "view", 1.0),
-      (6L, 5000L, 1L, "click", 1.0), (7L, 5020L, 1L, "error", 1.0),
-      (8L, 6000L, 2L, "signup", 1.0),
-      (9L, 9000L, 3L, "click", 1.0),
-      (10L, 9100L, 1L, "view", 1.0),
-      (11L, 12000L, 2L, "click", 1.0))
-    def slice(b: Int) = events(rows.filter { r =>
-      val cut0 = 5020L; val cut1 = 9100L
-      b match {
-        case 0 => r._2 <= cut0
-        case 1 => r._2 > cut0 && r._2 <= cut1
-        case _ => r._2 > cut1
-      }
-    })
     def outLines(root: String): Seq[(Long, String)] =
       spark.read.text(s"$root/out")
         .select(col("shard").cast("long"), col("value"))
@@ -247,7 +243,7 @@ class SftSpec extends AnyFunSuite {
     // clean reference run
     val ref = freshDir("graft_sealed_ref")
     (0 until 3).foreach(b =>
-      processSealedBatch(slice(b), b.toLong, ref, 512L))
+      processSealedBatch(sealedSlice(b), b.toLong, ref, 512L))
     val expected = outLines(ref)
     // per-batch sealing: exactly conversations 1-2 then 3-4 then 5-6
     // (cks u*1e6+session), and u2's open 12000 session NEVER exports
@@ -257,8 +253,8 @@ class SftSpec extends AnyFunSuite {
       2000002L, 3000001L))
     // drilled run: batches 0, 1 land normally
     val root = freshDir("graft_sealed_drill")
-    processSealedBatch(slice(0), 0L, root, 512L)
-    processSealedBatch(slice(1), 1L, root, 512L)
+    processSealedBatch(sealedSlice(0), 0L, root, 512L)
+    processSealedBatch(sealedSlice(1), 1L, root, 512L)
     val gen1 = Paths.get(root, "_graft_sealed_state.b1")
     val savedState = Files.readAllBytes(gen1)
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -275,7 +271,7 @@ class SftSpec extends AnyFunSuite {
     // generation is still on disk (its GC runs only after the b2
     // state file is durable), so it is restored too; the b2 active
     // dir stays behind as the stray the heal must delete
-    processSealedBatch(slice(2), 2L, root, 512L)
+    processSealedBatch(sealedSlice(2), 2L, root, 512L)
     Files.delete(Paths.get(root, "_graft_sealed_state.b2"))
     Files.write(gen1, savedState)
     org.apache.hadoop.fs.FileUtil.copy(hfs, actBak, hfs, act1, false,
@@ -285,7 +281,7 @@ class SftSpec extends AnyFunSuite {
     // replay of batch 2: the inventory diff deletes the stray files
     // (and the stray active generation), the re-append lands at the
     // SAME byte offset — byte-identical to the clean run
-    processSealedBatch(slice(2), 2L, root, 512L)
+    processSealedBatch(sealedSlice(2), 2L, root, 512L)
     assert(outLines(root) == expected)
     assert(!Files.exists(Paths.get(root, "_active/b1")) &&
       Files.exists(Paths.get(root, "_active/b2")),
@@ -293,8 +289,61 @@ class SftSpec extends AnyFunSuite {
     // redelivery of batch 1 AFTER batch 2: ledger-skipped, nothing
     // moves
     val fp = listParts(root)
-    processSealedBatch(slice(1), 1L, root, 512L)
+    processSealedBatch(sealedSlice(1), 1L, root, 512L)
     assert(listParts(root) == fp && outLines(root) == expected)
+  }
+
+  test("StreamingSealed through the sink adapter: after the last " +
+    "batch's commit record is lost, Spark redelivers it under the " +
+    "same batch id on restart and the generation ledger skips it — " +
+    "the export bytes do not change") {
+    import java.nio.file.{Files, Paths}
+    import graft.streaming.{ForeachBatchSink, StreamingSealed}
+    val base = tempDir("graft_sealed_redeliver")
+    val root = s"$base/store"
+    def land(b: Int): Unit = sealedSlice(b).coalesce(1).write
+      .mode("append").parquet(s"$base/src")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def start() = ForeachBatchSink.start(
+        spark.readStream.schema(sealedSlice(0).schema)
+          .parquet(s"$base/src"), s"$base/ckpt") { (batch, batchId) =>
+      seen += batchId
+      StreamingSealed.processSealedBatch(batch, batchId, root, 512L)
+    }
+    // relative path -> SHA-256 of the bytes, for every file under dir
+    def bytesUnder(dir: String): Map[String, String] = {
+      val top = Paths.get(dir)
+      val m = scala.collection.mutable.Map[String, String]()
+      Files.walk(top).forEach { p =>
+        if (Files.isRegularFile(p)) m += top.relativize(p).toString ->
+          org.apache.commons.codec.digest.DigestUtils.sha256Hex(
+            Files.readAllBytes(p))
+      }
+      m.toMap
+    }
+    // one file per slice, each its own micro-batch (ids 0, 1, 2)
+    land(0)
+    val q = start()
+    q.processAllAvailable()
+    Seq(1, 2).foreach { b => land(b); q.processAllAvailable() }
+    q.stop()
+    assert(seen == Seq(0L, 1L, 2L))
+    val exported = bytesUnder(s"$root/out")
+    val store = bytesUnder(root)
+    val cks = spark.read.text(s"$root/out").select(col("value"))
+      .as[String].collect()
+      .map(_.split(",")(0).stripPrefix("{\"ck\":").toLong).sorted.toSeq
+    assert(cks == Seq(1000001L, 1000002L, 1000003L, 2000001L,
+      2000002L, 3000001L))
+    // crash after batch 2 exported but before Spark recorded it done
+    prune(s"$base/ckpt", "commits", _ != "2")
+    seen.clear()
+    val q2 = start(); q2.processAllAvailable(); q2.stop()
+    assert(seen == Seq(2L), "the restart must redeliver batch 2")
+    assert(bytesUnder(s"$root/out") == exported)
+    // the ledger skips before any work: no state generation, landing
+    // or active dir is rewritten either
+    assert(bytesUnder(root) == store)
   }
 
   /** Task-level input ROWS read across every Spark job `f` runs (the

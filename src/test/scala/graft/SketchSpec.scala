@@ -9,7 +9,7 @@ import graft.operators.Sketches
   * property the q211 '__all__' row turns into a cross-engine check),
   * Count-Min's overestimate invariant, and the histogram-quantile
   * error bound. */
-class SketchSpec extends AnyFunSuite {
+class SketchSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -97,10 +97,11 @@ class SketchSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val rows = (0 until 60).map(i => (s"s${i % 3}", s"w${i % 23} w${i % 11}"))
     val mem = MemoryStream[(String, String)]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("kmv_ckpt").toString
-    val q = StreamingSketch.kmvSink(
-      mem.toDF().toDF("source", "text"), "source", "text", k, table, ckpt)
+    val ckpt = tempDir("kmv_ckpt")
+    val q = graft.streaming.ForeachBatchSink.start(
+        mem.toDF().toDF("source", "text"), ckpt) { (batch, _) =>
+      StreamingSketch.processBatch(batch, "source", "text", k, table)
+    }
     rows.grouped(20).foreach { g => mem.addData(g: _*); q.processAllAvailable() }
     q.stop()
     def state() = spark.table(table)
@@ -124,20 +125,30 @@ class SketchSpec extends AnyFunSuite {
   test("streaming CMS sink: stream == batch, replayed batch id skipped " +
     "by the in-table ledger — and WITHOUT the ledger it double-counts " +
     "(the negative control proving the ledger is load-bearing)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamingSketch
-    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.{ForeachBatchSink, StreamingSketch}
     val (depth, width) = (3, 16)
     val table = "cms_stream_spec"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val rows = (0 until 60).map(i => Tuple1(s"w${i % 23} w${i % 11}"))
-    val mem = MemoryStream[Tuple1[String]]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("cms_ckpt").toString
-    val q = StreamingSketch.cmsSink(
-      mem.toDF().toDF("text"), "text", depth, width, table, ckpt)
-    rows.grouped(20).foreach { g => mem.addData(g: _*); q.processAllAvailable() }
+    // a file source, so a restart from the checkpoint replays for real
+    val base = tempDir("cms_ckpt")
+    def land(g: Seq[Tuple1[String]]): Unit =
+      g.toDF("text").coalesce(1).write.mode("append").parquet(s"$base/src")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def start() = ForeachBatchSink.start(
+        spark.readStream.schema("text STRING").parquet(s"$base/src"),
+        s"$base/ckpt") { (batch, batchId) =>
+      seen += batchId
+      StreamingSketch.processCmsBatch(batch, "text", depth, width, table,
+        batchId)
+    }
+    // one file per group, each its own micro-batch (ids 0, 1, 2)
+    land(rows.take(20))
+    val q = start()
+    q.processAllAvailable()
+    rows.drop(20).grouped(20).foreach { g => land(g); q.processAllAvailable() }
     q.stop()
+    assert(seen == Seq(0L, 1L, 2L))
     def toCellMap(df: org.apache.spark.sql.DataFrame) = df
       .select(col("row").cast("long"), col("bucket").cast("long"),
         col("cell").cast("long"))
@@ -150,18 +161,23 @@ class SketchSpec extends AnyFunSuite {
     }
     val batchTwin = cellsOf(rows.toDF("text"))
     assert(cells() == batchTwin)
-    // replay batch id 0 — the ledger must skip the fold entirely
-    StreamingSketch.processCmsBatch(
-      rows.take(20).toDF("text"), "text", depth, width, table, 0L)
+    // crash after batch 2 folded but before Spark recorded it done:
+    // drop its commit record and restart — Spark redelivers batch 2
+    // under id 2, and the ledger must skip the fold entirely
+    prune(s"$base/ckpt", "commits", _ != "2")
+    seen.clear()
+    val q2 = start(); q2.processAllAvailable(); q2.stop()
+    assert(seen == Seq(2L), "the restart must redeliver batch 2")
+    spark.catalog.refreshTable(table)
     assert(cells() == batchTwin)
     // negative control: the same redelivery under a FRESH batch id
     // double-counts those rows — linear merge has no idempotence to
     // hide behind, which is exactly why the ledger exists
     StreamingSketch.processCmsBatch(
-      rows.take(20).toDF("text"), "text", depth, width, table, 99L)
+      rows.drop(40).toDF("text"), "text", depth, width, table, 99L)
     val doubled = cells()
     assert(doubled != batchTwin)
-    val extra = cellsOf(rows.take(20).toDF("text"))
+    val extra = cellsOf(rows.drop(40).toDF("text"))
     assert(doubled == batchTwin.map { case (k, v) =>
       k -> (v + extra.getOrElse(k, 0L)) }.filter(_._2 > 0))
     spark.sql(s"DROP TABLE IF EXISTS $table")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{AsOfJoin, Interpolate}
 import graft.streaming.EventStreaming
 
-class TemporalOpsSpec extends AnyFunSuite {
+class TemporalOpsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -200,7 +200,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, Long, String, Double, String)]
     val streamDf = mem.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val base = java.nio.file.Files.createTempDirectory("landing").toString
+    val base = tempDir("landing")
     val q = EventStreaming.writeLanding(streamDf, s"$base/out", s"$base/ckpt")
     mem.addData((1L, 1L, 1L, "click", 1.0, "{}"),
       (2L, 2L, 2L, "view", 2.0, "{}"))
@@ -224,7 +224,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, Long, String, Double, String)]
     val streamDf = mem.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val ckpt = java.nio.file.Files.createTempDirectory("bsink").toString
+    val ckpt = tempDir("bsink")
     val q = EventStreaming.bucketedSink(streamDf, "ev_bucketed", "user_id", 4, ckpt)
     mem.addData((1L, 1L, 1L, "click", 1.0, "{}"),
       (2L, 2L, 2L, "view", 2.0, "{}"))
@@ -270,7 +270,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, Long, String, Double, String)]
     val streamDf = mem.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val base = java.nio.file.Files.createTempDirectory("compact").toString
+    val base = tempDir("compact")
     val q = EventStreaming.writeLanding(streamDf, s"$base/out", s"$base/ckpt")
     mem.addData((1L, 1L, 1L, "click", 1.0, "{}"),
       (2L, 2L, 2L, "view", 2.0, "{}"))
@@ -295,7 +295,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     import graft.operators.Bucketing
     for (t <- Seq("ev_replay", "ev_replay__compact", "ev_replay__old"))
       Bucketing.dropManagedTable(spark, t)
-    val base = java.nio.file.Files.createTempDirectory("replay").toString
+    val base = tempDir("replay")
     Seq((1L, 1L, 1L, "click", 1.0, "{}"), (2L, 2L, 2L, "view", 2.0, "{}"),
       (3L, 3L, 1L, "click", 3.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -311,16 +311,9 @@ class TemporalOpsSpec extends AnyFunSuite {
     // non-transactional foreachBatch sink
     // prune the checkpoint to "batch 0 offsets written, nothing
     // committed": drop every commit record and any trailing batch's
-    // offsets, so restart re-executes the data batch. The local
-    // checksum FS keeps shadow .crc files; left behind they make the
-    // restarted query's atomic log rename fail as if another query
-    // owned the checkpoint, so they go too.
-    def prune(dir: String, keep: String => Boolean): Unit =
-      new java.io.File(s"$base/ckpt/$dir").listFiles().toSeq
-        .filterNot(f => keep(f.getName.stripPrefix(".").stripSuffix(".crc")))
-        .foreach(f => assert(f.delete(), f.toString))
-    prune("commits", _ => false)
-    prune("offsets", _ == "0")
+    // offsets, so restart re-executes the data batch
+    prune(s"$base/ckpt", "commits", _ => false)
+    prune(s"$base/ckpt", "offsets", _ == "0")
     val q2 = start(); q2.processAllAvailable(); q2.stop()
     // the sink appends through the stream's cloned session; a batch
     // reader that already resolved the table must refresh to see the
@@ -348,9 +341,11 @@ class TemporalOpsSpec extends AnyFunSuite {
       (i, txt)
     }
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingDedup.labelSink(mem.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", "sd_sigs", "sd_labels",
-      java.nio.file.Files.createTempDirectory("sdl").toString)
+    val q = graft.streaming.ForeachBatchSink.start(
+        mem.toDF().toDF("doc_id", "text"), tempDir("sdl")) { (batch, batchId) =>
+      StreamingDedup.processBatch(batch, batchId, "doc_id", "text",
+        "sd_sigs", "sd_labels")
+    }
     // dup families straddle all three batch boundaries
     mem.addData(corpus.slice(0, 5): _*); q.processAllAvailable()
     mem.addData(corpus.slice(5, 9): _*); q.processAllAvailable()
@@ -383,7 +378,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Array[Float])]
     val q = StreamingAnn.indexSink(mem.toDF().toDF("vec_id", "embedding"),
       "sann", "vec_id", "embedding",
-      java.nio.file.Files.createTempDirectory("sann").toString)
+      tempDir("sann"))
     val late = (40L until 60L).map(i => (i, vec(i)))
     mem.addData(late.take(10): _*); q.processAllAvailable()
     mem.addData(late.drop(10): _*); q.processAllAvailable()
@@ -414,7 +409,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val (centroids, indexed) = IvfIndex.build(base, "vec_id", "embedding", k = 4)
     IvfIndex.save(spark, "rann", centroids, indexed, buckets = 2)
     // file-source stream so a checkpoint crash-replay is simulable
-    val dir = java.nio.file.Files.createTempDirectory("rann").toString
+    val dir = tempDir("rann")
     val late = (30L until 40L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
     late.write.parquet(s"$dir/src")
     def start() = StreamingAnn.indexSink(
@@ -425,12 +420,8 @@ class TemporalOpsSpec extends AnyFunSuite {
     assert(spark.table("rann_lists").count() == 40)
     // crash after the append, before the offset commit: drop commit
     // records (and stray .crc shadows) and restart — batch 0 replays
-    def prune(sub: String, keep: String => Boolean): Unit =
-      new java.io.File(s"$dir/ckpt/$sub").listFiles().toSeq
-        .filterNot(f => keep(f.getName.stripPrefix(".").stripSuffix(".crc")))
-        .foreach(f => assert(f.delete(), f.toString))
-    prune("commits", _ => false)
-    prune("offsets", _ == "0")
+    prune(s"$dir/ckpt", "commits", _ => false)
+    prune(s"$dir/ckpt", "offsets", _ == "0")
     val q2 = start(); q2.processAllAvailable(); q2.stop()
     spark.catalog.refreshTable("rann_lists")
     assert(spark.table("rann_lists").count() == 50) // at-least-once
@@ -534,7 +525,7 @@ class TemporalOpsSpec extends AnyFunSuite {
   }
 
   test("file-landing stream over a landing dir aggregates all events") {
-    val dir = java.nio.file.Files.createTempDirectory("landing")
+    val dir = java.nio.file.Paths.get(tempDir("landing"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))

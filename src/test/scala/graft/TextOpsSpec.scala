@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.operators.{Dedup, Similarity}
 
-class TextOpsSpec extends AnyFunSuite {
+class TextOpsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -299,7 +299,7 @@ class TextOpsSpec extends AnyFunSuite {
         rows.map(r => (r._1, r._2)).toDF("doc_id", "n_tokens"),
         "doc_id", "n_tokens", 20L)
       .join(rows.map(r => (r._1, r._3)).toDF("doc_id", "ids"), Seq("doc_id"))
-    val base = java.nio.file.Files.createTempDirectory("shards").toString
+    val base = tempDir("shards")
     Packing.writeShards(packed, "doc_id", s"$base/a", seqsPerShard = 3L)
     Packing.writeShards(packed, "doc_id", s"$base/b", seqsPerShard = 3L)
     // idempotent overwrite: third write lands on a's path again
@@ -371,7 +371,7 @@ class TextOpsSpec extends AnyFunSuite {
         rows.map(r => (r._1, r._2)).toDF("doc_id", "n_tokens"),
         "doc_id", "n_tokens", budget = 10L, seqsPerShard = 3L)
       .join(rows.map(r => (r._1, r._3)).toDF("doc_id", "ids"), Seq("doc_id"))
-    val base = java.nio.file.Files.createTempDirectory("sealrep").toString
+    val base = tempDir("sealrep")
     Packing.writeByShardColumn(packed, "doc_id", s"$base/s")
     def files(root: String) = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard_id="))
@@ -440,7 +440,7 @@ class TextOpsSpec extends AnyFunSuite {
       Packing.packSealed(rs.map(r => (r._1, r._2)).toDF("doc_id", "n_tokens"),
           "doc_id", "n_tokens", budget = 10L, seqsPerShard = 3L)
         .join(rs.map(r => (r._1, r._3)).toDF("doc_id", "ids"), Seq("doc_id"))
-    val base = java.nio.file.Files.createTempDirectory("sealinc").toString
+    val base = tempDir("sealinc")
     Packing.writeByShardColumn(sealedOf(rows), "doc_id", s"$base/full")
     val (old, batch) = rows.splitAt(120)
     Packing.writeByShardColumn(sealedOf(old), "doc_id", s"$base/incr")
@@ -484,7 +484,7 @@ class TextOpsSpec extends AnyFunSuite {
       Packing.packByBudget(rs.map(r => (r._1, r._2)).toDF("doc_id", "n_tokens"),
           "doc_id", "n_tokens", 25L, tokenOffset = offset)
         .join(rs.map(r => (r._1, r._3)).toDF("doc_id", "ids"), Seq("doc_id"))
-    val base = java.nio.file.Files.createTempDirectory("shinc").toString
+    val base = tempDir("shinc")
     // reference: the whole corpus written from scratch
     Packing.writeShards(packedOf(rows), "doc_id", s"$base/full", 3L)
     // incremental: first 120 docs, then the id-suffix batch appended
@@ -530,7 +530,7 @@ class TextOpsSpec extends AnyFunSuite {
     val rng = new scala.util.Random(11)
     val rows = (0 until 90).map(i =>
       (i * 2L + 1, 1L + rng.nextInt(9), s"p-${i * 2L + 1}"))
-    val base = java.nio.file.Files.createTempDirectory("shsink").toString
+    val base = tempDir("shsink")
     // reference: whole corpus written from scratch
     val ref = Packing.packByBudget(
         rows.map(r => (r._1, r._2)).toDF("doc_id", "n_tokens"),
@@ -575,11 +575,7 @@ class TextOpsSpec extends AnyFunSuite {
     }
     // crash drill: wipe commits so the LAST batch replays on restart —
     // the id watermark must skip it and leave every shard byte alone
-    def prune(dir: String, keep: String => Boolean): Unit =
-      new java.io.File(s"$base/ckpt/$dir").listFiles().toSeq
-        .filterNot(f => keep(f.getName.stripPrefix(".").stripSuffix(".crc")))
-        .foreach(f => assert(f.delete(), f.toString))
-    prune("commits", _ == "0")
+    prune(s"$base/ckpt", "commits", _ == "0")
     val pre = files(s"$base/incr")
       .map { case (s, f) => s -> f.lastModified() }
     val q3 = start(); q3.processAllAvailable()
@@ -599,7 +595,7 @@ class TextOpsSpec extends AnyFunSuite {
     val rng = new scala.util.Random(31)
     val rows = (0 until 90).map(i =>
       (i * 2L + 1, 1L + rng.nextInt(9), s"p-${i * 2L + 1}"))
-    val base = java.nio.file.Files.createTempDirectory("shsinkseal").toString
+    val base = tempDir("shsinkseal")
     Packing.writeByShardColumn(
       Packing.packSealed(rows.map(r => (r._1, r._2)).toDF("doc_id", "n_tokens"),
           "doc_id", "n_tokens", 25L, 3L)
@@ -659,7 +655,7 @@ class TextOpsSpec extends AnyFunSuite {
     val rng = new scala.util.Random(23)
     val rows = (0 until 90).map(i =>
       (i * 2L + 1, 1L + rng.nextInt(9), s"p-${i * 2L + 1}"))
-    val base = java.nio.file.Files.createTempDirectory("shcrash").toString
+    val base = tempDir("shcrash")
     val ref = Packing.packByBudget(
         rows.map(r => (r._1, r._2)).toDF("doc_id", "n_tokens"),
         "doc_id", "n_tokens", 25L)
@@ -753,7 +749,7 @@ class TextOpsSpec extends AnyFunSuite {
     val rng = new scala.util.Random(47)
     val rows = (0 until 90).map(i =>
       (i * 2L + 1, 1L + rng.nextInt(9), s"p-${i * 2L + 1}"))
-    val base = java.nio.file.Files.createTempDirectory("shside").toString
+    val base = tempDir("shside")
     val ref = Packing.packByBudget(
         rows.map(r => (r._1, r._2)).toDF("doc_id", "n_tokens"),
         "doc_id", "n_tokens", 25L)

@@ -7,7 +7,7 @@ import graft.operators.ZOrder
 /** [[ZOrder]]: Morton code correctness, and the end-to-end layout
   * contract — a manifest-planned scan over the physically written
   * file dirs returns exactly the rows a full scan would. */
-class ZOrderSpec extends AnyFunSuite {
+class ZOrderSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -35,7 +35,7 @@ class ZOrderSpec extends AnyFunSuite {
         col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
     val assigned = ZOrder.assignFiles(li, "pk", "sk", "k",
       targetFiles = 16).localCheckpoint(true)
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder")
     assigned.write.mode("overwrite").partitionBy("file_id").parquet(dir)
     // box: the [1/4, 1/2) slice of each dimension
     val Array(mx, my) = li.agg(max(col("pk")) + 1, max(col("sk")) + 1)

@@ -45,9 +45,14 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
+    # queries that threw in Verify; a dir left by an earlier run is stale
+    errors_path = f"{OUT}/errors.json"
+    errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         pdir = f"{OUT}/{name}"
+        if name in errors:
+            print(f"FAIL {name}: verify error: {errors[name]}"); n_bad += 1; continue
         if not os.path.isdir(pdir):
             print(f"FAIL {name}: no spark output dir"); n_bad += 1; continue
         files = glob.glob(f"{pdir}/*.parquet")
