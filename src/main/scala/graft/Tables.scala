@@ -28,7 +28,7 @@ object Tables {
       // session zone; every entry point pins it, but an externally
       // built session must not silently shift ts by a zone offset.
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = read(spark, sfDir, name)
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => raw
         case org.apache.spark.sql.types.TimestampType |
@@ -40,6 +40,13 @@ object Tables {
             "a DOUBLE or STRING ts would be silently misinterpreted " +
             "against the epoch-nanos contract")
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else read(spark, sfDir, name)
   }
+
+  /** The table's schema comes from its footer, read on the driver
+    * (under the session conf just set, so `events` converts with
+    * `nanosAsLong`), not from Spark's per-read inference job. */
+  private def read(spark: SparkSession, sfDir: String,
+                   name: String): DataFrame =
+    graft.sources.ParquetFooter.read(spark, Seq(s"$sfDir/$name.parquet"))
 }

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.sources.ParquetFooter
 
 /** A versioned commit lost the optimistic-concurrency race: another
   * writer holds (or already published) the commit slot for `version`
@@ -31,7 +33,7 @@ final case class ConcurrentCommitException(path: String, version: Long,
   * I/O is ∝ touched buckets by construction, never the store — on
   * BOTH sides: the write rebuilds only touched buckets, and every
   * classification READ is partition-pruned to the batch's candidate
-  * buckets ([[candidateBuckets]] — exact, because `bucket =
+  * buckets ([[bucketsOf]] — exact, because `bucket =
   * pmod(key, buckets)` is a pure function of the key, so a batch key
   * can only live in its own bucket).
   */
@@ -134,13 +136,15 @@ object Lakehouse {
   private def bucketed(df: DataFrame, key: String, buckets: Int) =
     df.withColumn("bucket", pmod(col(key), lit(buckets.toLong)))
 
-  /** The buckets a batch CAN touch, computed from the batch alone:
-    * `bucket = pmod(key, buckets)` is a pure function of the key, so
-    * this set (≤ buckets values — the layout's parallelism constant,
-    * never data-sized) bounds every store read a merge needs. A read
-    * filtered to it is partition-pruned to exactly these dirs. */
-  private def candidateBuckets(b: DataFrame): Set[Long] =
-    b.select(col("bucket").cast("long")).distinct()
+  /** The distinct `bucket` values of a frame, collected (≤ buckets
+    * values — the layout's parallelism constant, never data-sized).
+    * For a batch these are its CANDIDATE buckets, the ones it can
+    * touch, computed from the batch alone: `bucket = pmod(key,
+    * buckets)` is a pure function of the key, so this set bounds every
+    * store read a merge needs, and a read filtered to it is
+    * partition-pruned to exactly these dirs. */
+  private def bucketsOf(df: DataFrame): Set[Long] =
+    df.select(col("bucket").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
 
   /** Upsert semantics here are WHOLE-ROW replacement, so a batch
@@ -284,7 +288,7 @@ object Lakehouse {
   def mergeInto(spark: SparkSession, path: String, batch: DataFrame,
                 key: String, buckets: Int): (Long, Long) = {
     val b = bucketed(batch, key, buckets)
-    val cand = candidateBuckets(b)
+    val cand = bucketsOf(b)
     if (cand.isEmpty) return (0L, 0L)
     // the classification/survivor read: ONLY the candidate bucket
     // dirs are listed or opened (they're passed as explicit roots —
@@ -337,8 +341,7 @@ object Lakehouse {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(path)
-    val written = replacement.select(col("bucket").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSet
+    val written = bucketsOf(replacement)
     val emptied = touched -- written
     emptied.foreach { bid =>
       fs.delete(new org.apache.hadoop.fs.Path(path, s"bucket=$bid"), true)
@@ -374,12 +377,106 @@ object Lakehouse {
     }
   }
 
+  /** The layout every `_manifest` writer writes and [[manifestDf]]
+    * reads with: fixed, so no manifest read infers a schema. */
+  private val ManifestSchema = StructType.fromDDL(
+    "version BIGINT, bucket BIGINT, vdir BIGINT, empty BOOLEAN, " +
+      "commit_ts BIGINT")
+
   /** The store's manifest, behind crash recovery — the only way any
     * code here opens `_manifest`. */
   private def manifestDf(spark: SparkSession, path: String): DataFrame = {
     recoverManifest(spark, path)
-    spark.read.parquet(s"$path/_manifest")
+    ParquetFooter.read(spark, Seq(s"$path/_manifest"), Some(ManifestSchema))
   }
+
+  /** One manifest row; `bucket = -1` is a checkpoint floor marker
+    * (always `empty`). */
+  private final case class Ptr(version: Long, bucket: Long, vdir: Long,
+                               empty: Boolean, commitTs: Long)
+
+  /** The manifest's rows, collected ONCE per op. The manifest is
+    * metadata-sized by construction (≤ commits × touched buckets
+    * pointer rows), so the head, the commit guards, pointer
+    * resolution and the vacuum live set all derive from these rows on
+    * the driver: one Spark job per op reads the manifest. */
+  private final class Manifest(path: String, val rows: Seq[Ptr]) {
+    val commits: Seq[Ptr] = rows.filter(_.bucket != -1L)
+    /** The last version number used, floor markers included. */
+    def maxVersion: Long = rows.map(_.version).maxOption.getOrElse(
+      throw new IllegalStateException(
+        s"manifest at $path exists but holds no commits"))
+    /** The last committed version. */
+    def head: Option[Long] = commits.map(_.version).maxOption
+    def lastTs: Option[Long] = commits.map(_.commitTs).maxOption
+    /** The checkpoint floor: history below it is collapsed. */
+    def floor: Option[Long] = rows.filter(_.bucket == -1L)
+      .map(_.version).maxOption
+
+    /** Each bucket's latest pointer at or below `version`, tombstones
+      * included. */
+    def latest(version: Long): Map[Long, Ptr] =
+      commits.filter(_.version <= version).groupBy(_.bucket)
+        .map { case (bk, ps) =>
+          bk -> ps.maxBy(p => (p.version, p.vdir, p.empty, p.commitTs))
+        }
+
+    def requireAboveFloor(version: Long): Unit =
+      if (floor.exists(version < _))
+        throw new IllegalArgumentException(
+          s"version $version predates the checkpoint floor " +
+            s"${floor.get} under $path")
+
+    /** The live (bucket, vdir) pointer pairs AS OF `version` (latest
+      * non-tombstone pointer per bucket), with both read guards: the
+      * checkpoint floor (a sub-floor read would silently return a
+      * PARTIAL state) and the predates-first-commit check.
+      * `bucketSet` restricts resolution to the given buckets. */
+    def pointers(version: Long,
+                 bucketSet: Option[Set[Long]]): Array[(Long, Long)] = {
+      requireAboveFloor(version)
+      if (!rows.exists(_.version <= version))
+        throw new IllegalArgumentException(
+          s"version $version predates the first commit under $path")
+      latest(version).valuesIterator
+        .filter(p => !p.empty && bucketSet.forall(_.contains(p.bucket)))
+        .map(p => (p.bucket, p.vdir)).toArray
+    }
+
+    /** The commit guards: `version` must be one past the head (a
+      * stale head — another writer published since the caller
+      * resolved — is the retryable OCC conflict, a gap a caller
+      * error), and commit_ts monotone in version (as-of-timestamp
+      * resolution assumes it). */
+    def checkNext(version: Long, cts: Long): Unit = {
+      val maxV = maxVersion
+      if (version <= maxV)
+        throw ConcurrentCommitException(path, version, "")
+      require(version == maxV + 1,
+        s"version must be one past the last ($maxV), got $version")
+      require(lastTs.forall(cts >= _),
+        s"commitTs must be monotone: got $cts after ${lastTs.get}")
+    }
+  }
+
+  private def manifest(spark: SparkSession, path: String): Manifest =
+    new Manifest(path, manifestDf(spark, path).collect().toSeq.map(r =>
+      Ptr(r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3),
+        r.getLong(4))))
+
+  /** Write pointer rows as one manifest file under `dest`. */
+  private def writeManifest(spark: SparkSession, rows: Seq[Ptr],
+                            dest: String, mode: SaveMode): Unit = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.map(p => Row(p.version, p.bucket, p.vdir,
+        p.empty, p.commitTs)).asJava, ManifestSchema)
+      .coalesce(1).write.mode(mode).parquet(dest)
+  }
+
+  /** Append one commit's pointer rows: one small file per commit. */
+  private def appendManifest(spark: SparkSession, path: String,
+                             rows: Seq[Ptr]): Unit =
+    writeManifest(spark, rows, s"$path/_manifest", SaveMode.Append)
 
   /** Crash-recovery-aware manifest read for external callers (the
     * streaming sink's replay-ledger probe). */
@@ -441,9 +538,7 @@ object Lakehouse {
     * second writer corrupt it later. */
   def breakCommit(spark: SparkSession, path: String,
                   version: Long): Unit = {
-    val committed = manifestDf(spark, path)
-      .filter(col("version") === version && col("bucket") =!= -1L)
-      .head(1).nonEmpty
+    val committed = manifest(spark, path).commits.exists(_.version == version)
     require(!committed,
       s"v$version at $path is COMMITTED — its marker must stay")
     hfs(spark, path).delete(
@@ -486,12 +581,8 @@ object Lakehouse {
     val b = bucketed(df, key, buckets).localCheckpoint(true)
     writeVDir(b, statCols, Seq(key), s"$path/v0")
     appendVStats(b, path, 0L, statCols)
-    b.select(col("bucket").cast("long")).distinct()
-      .select(lit(0L).as("version"), col("bucket"),
-        lit(0L).as("vdir"), lit(false).as("empty"),
-        lit(commitTs).as("commit_ts"))
-      .coalesce(1).write.mode(SaveMode.Append)
-      .parquet(s"$path/_manifest")
+    appendManifest(spark, path, bucketsOf(b).toSeq.sorted
+      .map(bk => Ptr(0L, bk, 0L, empty = false, commitTs)))
   }
 
   /** Resolve the store AS OF `version`: latest manifest pointer per
@@ -505,24 +596,28 @@ object Lakehouse {
     * with the store schema; a `version` before the first commit is a
     * caller error and throws descriptively. */
   def readVersioned(spark: SparkSession, path: String, version: Long,
-                    bucketSet: Option[Set[Long]] = None): DataFrame = {
-    val ptr = resolvePointers(spark, path, version, bucketSet)
+                    bucketSet: Option[Set[Long]] = None): DataFrame =
+    readResolved(spark, path, manifest(spark, path), version, bucketSet)
+
+  /** [[readVersioned]] over an already-collected manifest, so an op
+    * that also needs the head or the guards collects it once. */
+  private def readResolved(spark: SparkSession, path: String,
+                           man: Manifest, version: Long,
+                           bucketSet: Option[Set[Long]]): DataFrame = {
+    val ptr = man.pointers(version, bucketSet)
     if (ptr.isEmpty) {
-      val man = manifestDf(spark, path)
       // empty resolved view — surface it as an empty frame with the
       // store schema, from a non-tombstone pointer's version dir that
       // STILL EXISTS on disk (vacuum may have deleted older ones when
       // the latest commit emptied the store). Candidate vdirs are
       // bounded by commits — a metadata-sized scan.
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val vdirs = man.filter(!col("empty") && col("bucket") =!= -1L)
-        .select(col("vdir")).distinct()
-        .collect().map(_.getLong(0)).sorted.reverse
+      val fs = hfs(spark, path)
+      val vdirs = man.commits.filter(!_.empty).map(_.vdir).distinct
+        .sorted.reverse
       vdirs.map(v => vdirPath(spark, path, v))
         .find(dd => fs.exists(new org.apache.hadoop.fs.Path(dd))) match {
         case Some(dd) =>
-          return spark.read.parquet(dd).filter(lit(false))
+          return ParquetFooter.read(spark, Seq(dd)).filter(lit(false))
         case None =>
           throw new IllegalArgumentException(
             s"versioned store at $path has never held a row (or every" +
@@ -530,59 +625,15 @@ object Lakehouse {
       }
     }
     // Each version dir is schema-HOMOGENEOUS by construction (a merge
-    // writes one frame), so the default one-footer schema inference
-    // is exact per dir and the pruned read opens nothing extra; the
+    // writes one frame), so one footer read on the driver is its exact
+    // schema and the pruned read opens nothing extra; the
     // allowMissingColumns union stitches dirs of different widths
     // (schema evolution — [[mergeVersioned]] widens on upsert; older
     // rows read the new columns as null).
     ptr.groupBy(_._2).map { case (vd, bks) =>
-      spark.read.parquet(vdirPath(spark, path, vd))
+      ParquetFooter.read(spark, Seq(vdirPath(spark, path, vd)))
         .filter(col("bucket").isin(bks.map(_._1).toSeq: _*))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** The live (bucket, vdir) pointer pairs AS OF `version` — the
-    * manifest resolution [[readVersioned]] reads through (latest
-    * non-tombstone pointer per bucket at or below `version`),
-    * factored out so the stats-skipping reads resolve identically.
-    * Carries both read guards: the checkpoint floor (history below
-    * it is collapsed — a sub-floor read would silently return a
-    * PARTIAL state) and the predates-first-commit check. */
-  private def resolvePointers(spark: SparkSession, path: String,
-                              version: Long,
-                              bucketSet: Option[Set[Long]])
-      : Array[(Long, Long)] = {
-    // The manifest is metadata-sized by construction (≤ commits ×
-    // touched buckets pointer rows), so it collects ONCE and the
-    // latest-pointer-per-bucket resolution runs on the driver — the
-    // old shape paid two Spark actions (a guard agg plus a grouped
-    // max-struct collect) with a shuffle, per resolution, and every
-    // versioned op resolves at least once (§5: fewer actions on the
-    // multi-action lifecycle paths). Semantics identical: checkpoint
-    // markers (bucket = -1) carry empty = true, so they fall out of
-    // the final filter exactly as before.
-    val rows = manifestDf(spark, path)
-      .select(col("version").cast("long"), col("bucket").cast("long"),
-        col("vdir").cast("long"), col("empty"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-    val floorOpt = rows.filter(_._2 == -1L).map(_._1).maxOption
-    if (floorOpt.exists(version < _))
-      throw new IllegalArgumentException(
-        s"version $version predates the checkpoint floor " +
-          s"${floorOpt.get} under $path")
-    val upTo = rows.filter(_._1 <= version)
-    if (upTo.isEmpty)
-      throw new IllegalArgumentException(
-        s"version $version predates the first commit under $path")
-    val scoped = bucketSet match {
-      case Some(bs) => upTo.filter(r => bs.contains(r._2))
-      case None => upTo
-    }
-    scoped.groupBy(_._2).valuesIterator
-      .map(_.maxBy(r => (r._1, r._3, r._4)))
-      .filter(!_._4)
-      .map(r => (r._2, r._3)).toArray
   }
 
   // --------------------------------------- zero-copy branches
@@ -708,9 +759,8 @@ object Lakehouse {
     recoverManifest(spark, src)
     require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dst/_manifest")),
       s"versioned store already exists at $dst — delete it first")
-    val head = manifestDf(spark, src)
-      .agg(max(when(col("bucket") =!= -1L, col("version")))).head()
-    require(!head.isNullAt(0), s"cannot branch an empty store at $src")
+    val head = manifest(spark, src).head
+    require(head.nonEmpty, s"cannot branch an empty store at $src")
     fs.mkdirs(new org.apache.hadoop.fs.Path(dst))
     // register the clone under the BASE before anything makes it
     // readable — [[vacuumVersionsSafe]] and [[rebaseBranch]] discover
@@ -727,7 +777,7 @@ object Lakehouse {
       hfs(spark, src), new org.apache.hadoop.fs.Path(src, "_manifest"),
       fs, new org.apache.hadoop.fs.Path(dst, "_manifest"),
       false, spark.sparkContext.hadoopConfiguration)
-    head.getLong(0)
+    head.get
   }
 
   /** Time travel BY TIMESTAMP: resolve the latest version whose
@@ -736,13 +786,11 @@ object Lakehouse {
     * when `ts` predates the first commit. */
   def readVersionedAsOf(spark: SparkSession, path: String,
                         ts: Long): DataFrame = {
-    val v = manifestDf(spark, path)
-      .filter(col("bucket") =!= -1L && col("commit_ts") <= ts)
-      .agg(max(col("version"))).head()
-    if (v.isNullAt(0))
-      throw new IllegalArgumentException(
-        s"no commit at or before ts=$ts under $path")
-    readVersioned(spark, path, v.getLong(0))
+    val man = manifest(spark, path)
+    val v = man.commits.filter(_.commitTs <= ts).map(_.version).maxOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"no commit at or before ts=$ts under $path"))
+    readResolved(spark, path, man, v, None)
   }
 
   /** Point lookup on the VERSIONED store — [[lookupStore]]'s serving
@@ -803,6 +851,11 @@ object Lakehouse {
       .partitionBy("bucket")
       .parquet(dest)
 
+  /** The `_vstats` layout [[appendVStats]] writes. */
+  private val VStatsSchema = StructType.fromDDL(
+    "vdir BIGINT, bucket BIGINT, col_name STRING, min_v BIGINT, " +
+      "max_v BIGINT, n_rows BIGINT")
+
   private def appendVStats(frame: DataFrame, path: String, vdir: Long,
                            statCols: Seq[String]): Unit =
     if (statCols.nonEmpty) {
@@ -836,7 +889,7 @@ object Lakehouse {
     val fs = hfs(spark, path)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_vstats")))
       Map.empty
-    else spark.read.parquet(s"$path/_vstats")
+    else ParquetFooter.read(spark, Seq(s"$path/_vstats"), Some(VStatsSchema))
       .filter(col("col_name") === statCol)
       .groupBy(col("vdir"), col("bucket"))
       .agg(min(col("min_v")).as("mn"), max(col("max_v")).as("mx"))
@@ -857,7 +910,7 @@ object Lakehouse {
   def versionedRangeDirs(spark: SparkSession, path: String,
                          version: Long, statCol: String,
                          lo: Long, hi: Long): Seq[(Long, Long)] = {
-    val ptr = resolvePointers(spark, path, version, None)
+    val ptr = manifest(spark, path).pointers(version, None)
     if (ptr.isEmpty) return Nil
     // stats ownership = data ownership: each resolved dir's ranges
     // come from the store that physically holds v<vdir> (its own
@@ -930,13 +983,7 @@ object Lakehouse {
       }.reduce(_ intersect _)
     if (dirs.isEmpty)
       return readVersioned(spark, path, version, Some(Set.empty))
-    val pruned = dirs.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (vd, prs) =>
-        val base = vdirPath(spark, path, vd)
-        spark.read.option("basePath", base)
-          .parquet(prs.map(p => s"$base/bucket=${p._2}")
-            .toSeq.sorted: _*)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val pruned = readDirs(spark, path, dirs.toSeq)
     preds.foldLeft(pruned) { case (df, (c, lo, hi)) =>
       val rowPred = df.schema(c).dataType match {
         case org.apache.spark.sql.types.TimestampType =>
@@ -947,6 +994,17 @@ object Lakehouse {
       df.filter(rowPred)
     }
   }
+
+  /** Pair-level pruned read: only the given (vdir, bucket) dirs open,
+    * one footer-schema read per vdir (`basePath` keeps the `bucket`
+    * column), stitched like [[readVersioned]]. */
+  private def readDirs(spark: SparkSession, path: String,
+                       dirs: Seq[(Long, Long)]): DataFrame =
+    dirs.groupBy(_._1).toSeq.sortBy(_._1).map { case (vd, prs) =>
+      val base = vdirPath(spark, path, vd)
+      ParquetFooter.read(spark,
+        prs.map(p => s"$base/bucket=${p._2}").sorted, basePath = Some(base))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   // ----------------- per-dir bloom index (non-key point lookups)
 
@@ -978,15 +1036,28 @@ object Lakehouse {
                       colName: String, expectedItems: Long,
                       fpp: Double = 1e-6): Long = {
     require(expectedItems >= 1, "expectedItems must be >= 1")
-    val ptr = resolvePointers(spark, path, version, None)
+    val ptr = manifest(spark, path).pointers(version, None)
     if (ptr.isEmpty) return 0L
+    writeBlooms(spark, path, ptr.toSeq, colName, expectedItems, fpp,
+      SaveMode.Overwrite)
+  }
+
+  /** The `_vbloom/col=<col>` layout [[writeBlooms]] writes. */
+  private val VBloomSchema = StructType.fromDDL(
+    "vdir BIGINT, bucket BIGINT, n_items BIGINT, bits BINARY")
+
+  /** Build one bloom per (bucket, vdir) pointer pair over `colName`
+    * (one job per distinct vdir, each dir's values streaming straight
+    * into its bloom) and write them to the index. Returns the number
+    * written. */
+  private def writeBlooms(spark: SparkSession, path: String,
+                          ptr: Seq[(Long, Long)], colName: String,
+                          expectedItems: Long, fpp: Double,
+                          mode: SaveMode): Long = {
     import spark.implicits._
     val rows = ptr.groupBy(_._2).toSeq.sortBy(_._1).flatMap {
       case (vd, prs) => // prs: (bucket, vdir) pairs of this vdir
-        val base = vdirPath(spark, path, vd)
-        val df = spark.read.option("basePath", base)
-          .parquet(prs.map(p => s"$base/bucket=${p._1}")
-            .toSeq.sorted: _*)
+        val df = readDirs(spark, path, prs.map(_.swap))
         df.select(col("bucket").cast("long").as("bk"),
             statLongV(df, colName).as("v")).as[(Long, Long)]
           .groupByKey(_._1)
@@ -1004,7 +1075,7 @@ object Lakehouse {
           // distributed above
     }
     rows.toDF("vdir", "bucket", "n_items", "bits")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
+      .coalesce(1).write.mode(mode)
       .parquet(s"$path/_vbloom/col=$colName")
     rows.size.toLong
   }
@@ -1025,35 +1096,13 @@ object Lakehouse {
                        expectedItems: Long,
                        fpp: Double = 1e-6): Long = {
     require(expectedItems >= 1, "expectedItems must be >= 1")
-    val ptr = resolvePointers(spark, path, version, None)
+    val ptr = manifest(spark, path).pointers(version, None)
     if (ptr.isEmpty) return 0L
     val (_, missing0) = resolvedBlooms(spark, path, colName, ptr)
     if (missing0.isEmpty) return 0L
-    val missing = missing0.map { case (bk, vd, _) => (bk, vd) }
-    import spark.implicits._
-    val rows = missing.groupBy(_._2).toSeq.sortBy(_._1).flatMap {
-      case (vd, prs) => // prs: (bucket, vdir) pairs of this vdir
-        val base = vdirPath(spark, path, vd)
-        val df = spark.read.option("basePath", base)
-          .parquet(prs.map(p => s"$base/bucket=${p._1}")
-            .toSeq.sorted: _*)
-        df.select(col("bucket").cast("long").as("bk"),
-            statLongV(df, colName).as("v")).as[(Long, Long)]
-          .groupByKey(_._1)
-          .mapGroups { (bk, it) =>
-            val bloom = org.apache.spark.util.sketch.BloomFilter
-              .create(expectedItems, fpp)
-            var n = 0L
-            it.foreach { kv => bloom.putLong(kv._2); n += 1 }
-            val bos = new java.io.ByteArrayOutputStream()
-            bloom.writeTo(bos)
-            (vd, bk, n, bos.toByteArray)
-          }.collect().toSeq
-    }
-    rows.toDF("vdir", "bucket", "n_items", "bits")
-      .coalesce(1).write.mode(SaveMode.Append)
-      .parquet(s"$path/_vbloom/col=$colName")
-    rows.size.toLong
+    writeBlooms(spark, path,
+      missing0.toSeq.map { case (bk, vd, _) => (bk, vd) }, colName,
+      expectedItems, fpp, SaveMode.Append)
   }
 
   /** One store's OWN bloom rows for `colName` — ownership follows
@@ -1067,7 +1116,7 @@ object Lakehouse {
     val fs = hfs(spark, path)
     val dir = new org.apache.hadoop.fs.Path(path, s"_vbloom/col=$colName")
     if (!fs.exists(dir)) Map.empty
-    else spark.read.parquet(dir.toString)
+    else ParquetFooter.read(spark, Seq(dir.toString), Some(VBloomSchema))
       .select(col("vdir"), col("bucket"), col("bits"))
       .collect().map { r =>
         (r.getLong(0), r.getLong(1)) ->
@@ -1122,7 +1171,7 @@ object Lakehouse {
                          version: Long, colName: String,
                          values: Seq[Long]): Seq[(Long, Long)] = {
     require(values.nonEmpty, "versionedBloomDirs needs probe values")
-    val ptr = resolvePointers(spark, path, version, None)
+    val ptr = manifest(spark, path).pointers(version, None)
     if (ptr.isEmpty) return Nil
     val (blooms, missing) = resolvedBlooms(spark, path, colName, ptr)
     if (missing.nonEmpty)
@@ -1151,13 +1200,7 @@ object Lakehouse {
     val dirs = versionedBloomDirs(spark, path, version, colName, values)
     if (dirs.isEmpty)
       return readVersioned(spark, path, version, Some(Set.empty))
-    val pruned = dirs.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (vd, prs) =>
-        val base = vdirPath(spark, path, vd)
-        spark.read.option("basePath", base)
-          .parquet(prs.map(p => s"$base/bucket=${p._2}")
-            .toSeq.sorted: _*)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val pruned = readDirs(spark, path, dirs.toSeq)
     val probe = pruned.schema(colName).dataType match {
       case org.apache.spark.sql.types.TimestampType =>
         unix_micros(col(colName)).isin(values: _*)
@@ -1182,25 +1225,12 @@ object Lakehouse {
                      writerToken: String = "solo",
                      statCols: Seq[String] = Nil): (Long, Long) = {
     val cts = if (commitTs == -1L) version else commitTs
-    val maxRow = manifestDf(spark, path)
-      .agg(max(col("version")),
-        max(when(col("bucket") =!= -1L, col("commit_ts")))).head()
-    val maxV = maxRow.getLong(0)
-    // a STALE head (another writer published this or a later version
-    // since the caller resolved) is the retryable OCC conflict; a
-    // version GAP is a plain caller error
-    if (version <= maxV)
-      throw ConcurrentCommitException(path, version, "")
-    require(version == maxV + 1,
-      s"version must be one past the last ($maxV), got $version")
-    // as-of-timestamp resolution assumes commit_ts is monotone in
-    // version — enforce it the same way the version sequence is
-    require(maxRow.isNullAt(1) || cts >= maxRow.getLong(1),
-      s"commitTs must be monotone: got $cts after ${maxRow.getLong(1)}")
+    val man = manifest(spark, path)
+    man.checkNext(version, cts)
     val b = bucketed(batch, key, buckets)
-    val cand = candidateBuckets(b)
+    val cand = bucketsOf(b)
     if (cand.isEmpty) return (0L, 0L)
-    val cur = readVersioned(spark, path, version - 1, Some(cand))
+    val cur = readResolved(spark, path, man, version - 1, Some(cand))
     val curCols = cur.columns.filter(_ != "bucket").toSeq
     // schema EVOLUTION on upsert: batch-only payload columns widen
     // the store (survivors read them as null via the allowMissing
@@ -1231,15 +1261,10 @@ object Lakehouse {
       .localCheckpoint(true)
     writeVDir(replacement, statCols, Seq(key), s"$path/v$version")
     appendVStats(replacement, path, version, statCols)
-    val written = replacement.select(col("bucket").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    val rows = touched.toSeq.sorted.map { bk =>
-      (version, bk, version, !written.contains(bk), cts)
-    }
-    import spark.implicits._
-    rows.toDF("version", "bucket", "vdir", "empty", "commit_ts")
-      .coalesce(1).write.mode(SaveMode.Append)
-      .parquet(s"$path/_manifest")
+    val written = bucketsOf(replacement)
+    appendManifest(spark, path, touched.toSeq.sorted.map { bk =>
+      Ptr(version, bk, version, !written.contains(bk), cts)
+    })
     (touched.size.toLong,
       (written.size + (touched -- written).size).toLong)
   }
@@ -1269,32 +1294,20 @@ object Lakehouse {
                        writerToken: String = "solo",
                        statCols: Seq[String] = Nil): Long = {
     val cts = if (commitTs == -1L) asVersion else commitTs
-    val head = manifestDf(spark, path).agg(
-      max(col("version")),
-      max(when(col("bucket") =!= -1L, col("commit_ts")))).head()
-    val maxV = head.getLong(0)
-    if (asVersion <= maxV)
-      throw ConcurrentCommitException(path, asVersion, "")
-    require(asVersion == maxV + 1,
-      s"version must be one past the last ($maxV), got $asVersion")
-    require(head.isNullAt(1) || cts >= head.getLong(1),
-      s"commitTs must be monotone: got $cts after ${head.getLong(1)}")
-    val state = readVersioned(spark, path, maxV).localCheckpoint(true)
+    val man = manifest(spark, path)
+    man.checkNext(asVersion, cts)
+    val state = readResolved(spark, path, man, man.maxVersion, None)
+      .localCheckpoint(true)
     try {
-      val written = state.select(col("bucket").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSet
+      val written = bucketsOf(state)
       if (written.isEmpty) return 0L // empty head: slot stays free
       acquireCommit(spark, path, asVersion, writerToken)
       writeVDir(state, statCols, Seq(key), s"$path/v$asVersion")
       appendVStats(state, path, asVersion, statCols)
-      val rows = written.toSeq.sorted.map { bk =>
-        (asVersion, bk, asVersion, false, cts)
-      }
-      import spark.implicits._
-      rows.toDF("version", "bucket", "vdir", "empty", "commit_ts")
-        .coalesce(1).write.mode(SaveMode.Append)
-        .parquet(s"$path/_manifest")
-      rows.size.toLong
+      appendManifest(spark, path, written.toSeq.sorted.map { bk =>
+        Ptr(asVersion, bk, asVersion, empty = false, cts)
+      })
+      written.size.toLong
     } finally {
       org.apache.spark.sql.GraftSqlBridge.unpersistBackingRdds(state)
     }
@@ -1321,9 +1334,7 @@ object Lakehouse {
     var attempt = 0
     var last: ConcurrentCommitException = null
     while (attempt < maxAttempts) {
-      val head = manifestDf(spark, path)
-        .agg(max(col("version"))).head().getLong(0)
-      val v = head + 1
+      val v = manifest(spark, path).maxVersion + 1
       try {
         val (touched, _) = mergeVersioned(spark, path, v, batch, key,
           buckets, commitTs, writerToken)
@@ -1355,49 +1366,29 @@ object Lakehouse {
                      asVersion: Long, commitTs: Long = -1L,
                      writerToken: String = "solo"): Long = {
     val cts = if (commitTs == -1L) asVersion else commitTs
-    val man = manifestDf(spark, path).localCheckpoint(true)
-    val head = man.agg(max(col("version")),
-      max(when(col("bucket") =!= -1L, col("commit_ts"))),
-      max(when(col("bucket") === -1L, col("version")))).head()
-    val maxV = head.getLong(0)
-    if (asVersion <= maxV)
-      throw ConcurrentCommitException(path, asVersion, "")
-    require(asVersion == maxV + 1,
-      s"version must be one past the last ($maxV), got $asVersion")
-    require(head.isNullAt(1) || cts >= head.getLong(1),
-      s"commitTs must be monotone: got $cts after ${head.getLong(1)}")
+    val man = manifest(spark, path)
+    man.checkNext(asVersion, cts)
+    val maxV = man.maxVersion
     require(toVersion <= maxV,
       s"cannot restore to $toVersion: head is $maxV")
-    if (!head.isNullAt(2) && toVersion < head.getLong(2))
-      throw new IllegalArgumentException(
-        s"version $toVersion predates the checkpoint floor " +
-          s"${head.getLong(2)} under $path")
-    def ptr(v: Long) = man
-      .filter(col("bucket") =!= -1L && col("version") <= v)
-      .groupBy(col("bucket"))
-      .agg(max(struct(col("version").as("v"), col("vdir").as("vdir"),
-        col("empty").as("empty"))).as("__m"))
-      .select(col("bucket"), col("__m.vdir").as("vdir"),
-        col("__m.empty").as("empty"))
-    val rows = ptr(toVersion)
-      .withColumnRenamed("vdir", "tvd").withColumnRenamed("empty", "te")
-      .join(ptr(maxV)
-        .withColumnRenamed("vdir", "cvd").withColumnRenamed("empty", "ce"),
-        Seq("bucket"), "full_outer")
-      .filter(!(col("tvd") <=> col("cvd") && col("te") <=> col("ce")))
-      .select(col("bucket").cast("long"),
-        coalesce(col("te"), lit(true)).as("te"), col("tvd"))
-      .collect().map { r =>
-        val tombstone = r.getBoolean(1)
-        (asVersion, r.getLong(0),
-          if (tombstone) asVersion else r.getLong(2), tombstone, cts)
-      }.toSeq.sortBy(_._2)
+    man.requireAboveFloor(toVersion)
+    val target = man.latest(toVersion)
+    val current = man.latest(maxV)
+    // one pointer per bucket whose resolved (vdir, empty) differs; a
+    // bucket the target state never held restores as a tombstone
+    val rows = (target.keySet ++ current.keySet).toSeq.sorted
+      .filter { bk =>
+        target.get(bk).map(p => (p.vdir, p.empty)) !=
+          current.get(bk).map(p => (p.vdir, p.empty))
+      }.map { bk =>
+        target.get(bk).filter(!_.empty) match {
+          case Some(p) => Ptr(asVersion, bk, p.vdir, empty = false, cts)
+          case None => Ptr(asVersion, bk, asVersion, empty = true, cts)
+        }
+      }
     if (rows.isEmpty) return 0L
     acquireCommit(spark, path, asVersion, writerToken)
-    import spark.implicits._
-    rows.toDF("version", "bucket", "vdir", "empty", "commit_ts")
-      .coalesce(1).write.mode(SaveMode.Append)
-      .parquet(s"$path/_manifest")
+    appendManifest(spark, path, rows)
     rows.size.toLong
   }
 
@@ -1449,10 +1440,7 @@ object Lakehouse {
       // that are genuinely OURS (dir numbers collide across stores
       // by design; retaining a same-numbered stranger's need would
       // silently over-retain)
-      manifestDf(spark, b)
-        .filter(!col("empty") && col("bucket") =!= -1L)
-        .select(col("vdir")).distinct()
-        .collect().map(_.getLong(0))
+      manifest(spark, b).commits.filter(!_.empty).map(_.vdir).distinct
         .filter(v => vdirOwner(spark, b, v) == path)
     }.toSet
     vacuumImpl(spark, path, floor, branchNeeds)
@@ -1461,18 +1449,18 @@ object Lakehouse {
   private def vacuumImpl(spark: SparkSession, path: String,
                          floor: Long,
                          extraNeeded: Set[Long]): (Long, Long) = {
-    val man = manifestDf(spark, path).localCheckpoint(true)
-    val maxV = man.agg(max(col("version"))).head().getLong(0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bucket")).orderBy(col("version"))
+    val man = manifest(spark, path)
+    // a pointer is its bucket's live pointer on [version, the bucket's
+    // next version), so its vdir is needed iff it is non-empty and
+    // that interval reaches the retention window
     val live: Set[Long] =
-      if (floor > maxV) Set.empty // no as-of view in the window
-      else man.filter(col("bucket") =!= -1L)
-        .withColumn("__next", lead(col("version"), 1).over(w))
-        .filter(!col("empty") &&
-          (col("__next").isNull || col("__next") > floor))
-        .select(col("vdir")).distinct()
-        .collect().map(_.getLong(0)).toSet
+      if (floor > man.maxVersion) Set.empty // no as-of view in the window
+      else man.commits.groupBy(_.bucket).valuesIterator.flatMap { ps =>
+        val byV = ps.sortBy(_.version)
+        byV.zip(byV.drop(1).map(p => Some(p.version)) :+ None).collect {
+          case (p, next) if !p.empty && next.forall(_ > floor) => p.vdir
+        }
+      }.toSet
     val needed = live ++ extraNeeded
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1520,7 +1508,7 @@ object Lakehouse {
   def mergeIntoLogged(spark: SparkSession, path: String, logPath: String,
                       version: Long, batch: DataFrame, key: String,
                       buckets: Int): Unit = {
-    val cand = candidateBuckets(bucketed(batch, key, buckets))
+    val cand = bucketsOf(bucketed(batch, key, buckets))
     val keysInStore = spark.read.parquet(path)
       .filter(col("bucket").isin(cand.toSeq: _*))
       .select(col(key)).distinct()
@@ -1599,7 +1587,7 @@ object Lakehouse {
                            logPath: String, version: Long,
                            batch: DataFrame, key: String, buckets: Int,
                            commitTs: Long = -1L): Unit = {
-    val cand = candidateBuckets(bucketed(batch, key, buckets))
+    val cand = bucketsOf(bucketed(batch, key, buckets))
     val keysInStore = readVersioned(spark, path, version - 1, Some(cand))
       .select(col(key)).distinct().localCheckpoint(true)
     val c = classifyBatch(keysInStore, batch, key)
@@ -1631,38 +1619,16 @@ object Lakehouse {
     val fs = new org.apache.hadoop.fs.Path(mpath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nextPath = new org.apache.hadoop.fs.Path(s"${mpath}__next")
-    val man0 = manifestDf(spark, path).localCheckpoint(true)
+    val man = manifest(spark, path)
     fs.delete(nextPath, true) // clear any stale pre-swap leftover
     val filesBefore = fs.listStatus(new org.apache.hadoop.fs.Path(mpath))
       .count(_.getPath.getName.startsWith("part-")).toLong
-    val rowsBefore = man0.count()
     // the floor can only rise: a lower re-checkpoint cannot restore
     // history the earlier collapse already dropped
-    val oldFloor = man0.filter(col("bucket") === -1L)
-      .agg(max(col("version"))).head()
-    val newFloor =
-      if (oldFloor.isNullAt(0)) floor else math.max(floor, oldFloor.getLong(0))
-    val man = man0.filter(col("bucket") =!= -1L)
-    val cols = Seq("version", "bucket", "vdir", "empty", "commit_ts")
-    val collapsed = man.filter(col("version") <= newFloor)
-      .groupBy(col("bucket"))
-      .agg(max(struct(col("version").as("version"), col("vdir").as("vdir"),
-        col("empty").as("empty"), col("commit_ts").as("commit_ts")))
-        .as("__m"))
-      .select(col("__m.version").as("version"), col("bucket"),
-        col("__m.vdir").as("vdir"), col("__m.empty").as("empty"),
-        col("__m.commit_ts").as("commit_ts"))
-      .select(cols.map(col): _*)
-    val marker = spark.range(1).select(
-      lit(newFloor).as("version"), lit(-1L).as("bucket"),
-      lit(-1L).as("vdir"), lit(true).as("empty"),
-      lit(Long.MinValue).as("commit_ts"))
-    val next = collapsed
-      .unionByName(man.filter(col("version") > newFloor)
-        .select(cols.map(col): _*))
-      .unionByName(marker.select(cols.map(col): _*))
-      .localCheckpoint(true)
-    val rowsAfter = next.count()
+    val newFloor = man.floor.fold(floor)(math.max(floor, _))
+    val next = man.latest(newFloor).values.toSeq.sortBy(_.bucket) ++
+      man.commits.filter(_.version > newFloor) :+
+      Ptr(newFloor, -1L, -1L, empty = true, Long.MinValue)
     // ATOMIC publish (the sidecar temp+rename discipline): the
     // collapsed manifest lands COMPLETE (with its _SUCCESS) under
     // `_manifest__next` while the live one still serves, then the
@@ -1672,8 +1638,7 @@ object Lakehouse {
     // finds the complete __next and finishes the swap. An in-place
     // Overwrite would instead have a window with NO manifest at all —
     // every pointer in the store gone.
-    next.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(nextPath.toString)
+    writeManifest(spark, next, nextPath.toString, SaveMode.Overwrite)
     if (!fs.exists(new org.apache.hadoop.fs.Path(nextPath, "_SUCCESS")))
       throw new java.io.IOException(
         s"checkpoint staging incomplete (no _SUCCESS) at $nextPath")
@@ -1681,7 +1646,7 @@ object Lakehouse {
     if (!fs.rename(nextPath, new org.apache.hadoop.fs.Path(mpath)))
       throw new java.io.IOException(
         s"checkpoint swap failed: $nextPath -> $mpath")
-    (rowsBefore, rowsAfter, filesBefore, 1L)
+    (man.rows.size.toLong, next.size.toLong, filesBefore, 1L)
   }
 
   /** CHANGE DATA FEED between two versions: the row-level diff of
@@ -1710,33 +1675,20 @@ object Lakehouse {
     * contributions on each version step (the q378 pattern), so view
     * maintenance costs ∝ churn, never the store. */
   def changedBuckets(spark: SparkSession, path: String, v1: Long,
-                     v2: Long): Set[Long] = {
+                     v2: Long): Set[Long] =
+    changedOf(manifest(spark, path), v1, v2)
+
+  private def changedOf(man: Manifest, v1: Long, v2: Long): Set[Long] = {
     require(v1 < v2, s"diff needs v1 < v2, got $v1, $v2")
-    val man = manifestDf(spark, path).localCheckpoint(true)
     // same loud guard as readVersioned: below a checkpoint floor the
     // pointer history is collapsed, so resolution there would be
     // silently PARTIAL — the worst failure mode for a diff
-    val fl = man.agg(max(when(col("bucket") === -1L, col("version"))))
-      .head()
-    if (!fl.isNullAt(0) && v1 < fl.getLong(0))
-      throw new IllegalArgumentException(
-        s"version $v1 predates the checkpoint floor ${fl.getLong(0)} " +
-          s"under $path")
-    def ptr(v: Long) = man.filter(col("version") <= v)
-      .groupBy(col("bucket"))
-      .agg(max(struct(col("version").as("v"), col("vdir").as("vdir"),
-        col("empty").as("empty"))).as("__m"))
-      .select(col("bucket"), col("__m.vdir").as("vdir"),
-        col("__m.empty").as("empty"))
-    ptr(v1)
-      .withColumnRenamed("vdir", "v1d").withColumnRenamed("empty", "e1")
-      .join(ptr(v2)
-        .withColumnRenamed("vdir", "v2d").withColumnRenamed("empty", "e2"),
-        Seq("bucket"), "full_outer")
-      .filter(!(col("v1d") <=> col("v2d") && col("e1") <=> col("e2")))
-      .filter(col("bucket") =!= -1L)
-      .select(col("bucket").cast("long"))
-      .collect().map(_.getLong(0)).toSet
+    man.requireAboveFloor(v1)
+    val (a, b) = (man.latest(v1), man.latest(v2))
+    (a.keySet ++ b.keySet).filter { bk =>
+      a.get(bk).map(p => (p.vdir, p.empty)) !=
+        b.get(bk).map(p => (p.vdir, p.empty))
+    }
   }
 
   /** [[diffVersions]] carrying the POST-IMAGE payload (null columns
@@ -1747,10 +1699,10 @@ object Lakehouse {
     * does with it (gate-pinned by the replication query). */
   def diffVersionsFull(spark: SparkSession, path: String, v1: Long,
                        v2: Long, key: String): DataFrame = {
-    require(v1 < v2, s"diff needs v1 < v2, got $v1, $v2")
-    val cb = changedBuckets(spark, path, v1, v2)
-    val s1 = readVersioned(spark, path, v1, Some(cb))
-    val s2 = readVersioned(spark, path, v2, Some(cb))
+    val man = manifest(spark, path)
+    val cb = changedOf(man, v1, v2)
+    val s1 = readResolved(spark, path, man, v1, Some(cb))
+    val s2 = readResolved(spark, path, man, v2, Some(cb))
     rowDiff(s1, s2, key)
   }
 
@@ -1794,17 +1746,9 @@ object Lakehouse {
     * Metadata-sized (≤ buckets entries). */
   private def resolvedDirs(spark: SparkSession, path: String,
                            version: Long): Map[Long, Option[String]] =
-    manifestDf(spark, path)
-      .filter(col("bucket") =!= -1L && col("version") <= version)
-      .groupBy(col("bucket"))
-      .agg(max(struct(col("version").as("v"), col("vdir").as("vdir"),
-        col("empty").as("empty"))).as("__m"))
-      .select(col("bucket"), col("__m.vdir").as("vdir"),
-        col("__m.empty").as("empty"))
-      .collect().map { r =>
-        r.getLong(0) -> (if (r.getBoolean(2)) None
-          else Some(vdirPath(spark, path, r.getLong(1))))
-      }.toMap
+    manifest(spark, path).latest(version).map { case (bk, p) =>
+      bk -> (if (p.empty) None else Some(vdirPath(spark, path, p.vdir)))
+    }
 
   /** CROSS-STORE diff — [[diffVersionsFull]] generalized to two
     * stores (the base-vs-branch comparison after a
@@ -1836,17 +1780,15 @@ object Lakehouse {
     * merge-back guard: a conflicting bucket holds base commits a
     * branch replay would overwrite. */
   def branchConflicts(spark: SparkSession, base: String,
-                      branch: String, forkVersion: Long): Set[Long] = {
-    def headOf(p: String): Long = manifestDf(spark, p)
-      .agg(max(when(col("bucket") =!= -1L, col("version"))))
-      .head().getLong(0)
-    val baseMoved =
-      if (headOf(base) <= forkVersion) Set.empty[Long]
-      else changedBuckets(spark, base, forkVersion, headOf(base))
-    val brMoved =
-      if (headOf(branch) <= forkVersion) Set.empty[Long]
-      else changedBuckets(spark, branch, forkVersion, headOf(branch))
-    baseMoved.intersect(brMoved)
+                      branch: String, forkVersion: Long): Set[Long] =
+    movedSince(manifest(spark, base), forkVersion)
+      .intersect(movedSince(manifest(spark, branch), forkVersion))
+
+  /** The buckets whose resolved pointer moved from `forkVersion` to
+    * the head. */
+  private def movedSince(man: Manifest, forkVersion: Long): Set[Long] = {
+    val head = man.head.get
+    if (head <= forkVersion) Set.empty else changedOf(man, forkVersion, head)
   }
 
   /** MERGE a branch BACK into its base (the other half of
@@ -1870,43 +1812,27 @@ object Lakehouse {
                   writerToken: String = "solo",
                   statCols: Seq[String] = Nil): Long = {
     val cts = if (commitTs == -1L) asVersion else commitTs
-    val conflicts = branchConflicts(spark, base, branch, forkVersion)
+    val (manBase, manBr) = (manifest(spark, base), manifest(spark, branch))
+    val baseMoved = movedSince(manBase, forkVersion)
+    val moved = movedSince(manBr, forkVersion)
+    val conflicts = baseMoved.intersect(moved)
     if (conflicts.nonEmpty)
       throw new IllegalStateException(
         s"merge-back of $branch into $base conflicts on bucket(s) " +
           s"${conflicts.toSeq.sorted.mkString(", ")} — both sides " +
           s"moved them since fork v$forkVersion")
-    val head = manifestDf(spark, base).agg(max(col("version")),
-      max(when(col("bucket") =!= -1L, col("commit_ts")))).head()
-    val maxV = head.getLong(0)
-    if (asVersion <= maxV)
-      throw ConcurrentCommitException(base, asVersion, "")
-    require(asVersion == maxV + 1,
-      s"version must be one past the last ($maxV), got $asVersion")
-    require(head.isNullAt(1) || cts >= head.getLong(1),
-      s"commitTs must be monotone: got $cts after ${head.getLong(1)}")
-    val brHead = manifestDf(spark, branch)
-      .agg(max(when(col("bucket") =!= -1L, col("version"))))
-      .head().getLong(0)
-    val moved: Set[Long] =
-      if (brHead <= forkVersion) Set.empty
-      else changedBuckets(spark, branch, forkVersion, brHead)
+    manBase.checkNext(asVersion, cts)
     if (moved.isEmpty) return 0L
     acquireCommit(spark, base, asVersion, writerToken)
-    val state = readVersioned(spark, branch, brHead, Some(moved))
-      .localCheckpoint(true)
+    val state = readResolved(spark, branch, manBr, manBr.head.get,
+      Some(moved)).localCheckpoint(true)
     writeVDir(state, statCols, Nil, s"$base/v$asVersion")
     appendVStats(state, base, asVersion, statCols)
-    val written = state.select(col("bucket").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    val rows = moved.toSeq.sorted.map { bk =>
-      (asVersion, bk, asVersion, !written.contains(bk), cts)
-    }
-    import spark.implicits._
-    rows.toDF("version", "bucket", "vdir", "empty", "commit_ts")
-      .coalesce(1).write.mode(SaveMode.Append)
-      .parquet(s"$base/_manifest")
-    rows.size.toLong
+    val written = bucketsOf(state)
+    appendManifest(spark, base, moved.toSeq.sorted.map { bk =>
+      Ptr(asVersion, bk, asVersion, !written.contains(bk), cts)
+    })
+    moved.size.toLong
   }
 
   /** REBASE a branch onto its base's CURRENT head (manifest-only):
@@ -1953,10 +1879,9 @@ object Lakehouse {
     recoverManifest(spark, branch)
     require(baseOf(spark, branch).contains(base),
       s"$branch is not a branch of $base (no matching _base pointer)")
-    val head = manifestDf(spark, base)
-      .agg(max(when(col("bucket") =!= -1L, col("version")))).head()
-    require(!head.isNullAt(0),
-      s"cannot rebase onto an empty store at $base")
+    val manBase = manifest(spark, base)
+    val head = manBase.head
+    require(head.nonEmpty, s"cannot rebase onto an empty store at $base")
     val fs = hfs(spark, branch)
     // guard 1: a live clone's pre-fork pointers resolve through the
     // very dirs this rebase deletes — never destructible from here
@@ -1969,10 +1894,8 @@ object Lakehouse {
     // writer mid-commit (or a dead one — breakCommit clears it);
     // rebase deletes _commits wholesale, which would hand the slot
     // to a second writer
-    val committedVs = manifestDf(spark, branch)
-      .filter(col("bucket") =!= -1L)
-      .select(col("version")).distinct()
-      .collect().map(_.getLong(0)).toSet
+    val brCommits = manifest(spark, branch).commits
+    val committedVs = brCommits.map(_.version).toSet
     val slotDir = new org.apache.hadoop.fs.Path(branch, "_commits")
     val inflight =
       if (!fs.exists(slotDir)) Array.empty[String]
@@ -1989,21 +1912,14 @@ object Lakehouse {
     // that the base has NOT advanced past it is an unmerged edit
     // this rebase would destroy
     if (!force) {
-      val rows = manifestDf(spark, branch)
-        .filter(col("bucket") =!= -1L)
-        .select(col("version"), col("bucket"), col("vdir"))
-        .collect()
       val ownsDir: Long => Boolean = v =>
         fs.exists(new org.apache.hadoop.fs.Path(branch, s"v$v"))
-      val forkH = rows.filterNot(r => ownsDir(r.getLong(2)))
-        .map(_.getLong(0)).foldLeft(-1L)(math.max)
-      val moved = rows.filter(_.getLong(0) > forkH)
-        .map(_.getLong(1)).toSet
+      val forkH = brCommits.filterNot(p => ownsDir(p.vdir))
+        .map(_.version).foldLeft(-1L)(math.max)
+      val moved = brCommits.filter(_.version > forkH).map(_.bucket).toSet
       if (moved.nonEmpty) {
-        val baseLatest = manifestDf(spark, base)
-          .filter(col("bucket").isin(moved.toSeq: _*))
-          .groupBy(col("bucket")).agg(max(col("version")).as("v"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val baseLatest = manBase.commits.groupMapReduce(_.bucket)(_.version)(
+          math.max)
         val unmerged = moved.toSeq
           .filter(bk => baseLatest.getOrElse(bk, -1L) <= forkH).sorted
         require(unmerged.isEmpty,
@@ -2042,7 +1958,7 @@ object Lakehouse {
     if (!fs.rename(nextPath, mpath))
       throw new java.io.IOException(
         s"rebase swap failed: $nextPath -> $mpath")
-    head.getLong(0)
+    head.get
   }
 
   /** BITEMPORAL (as-of) JOIN against the versioned store: each probe

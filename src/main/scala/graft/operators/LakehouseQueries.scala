@@ -1713,7 +1713,7 @@ object LakehouseQueries {
       processVersionedBatch(v1Batch(base), 1L, path, "doc_id", 16)
       processVersionedBatch(v2Batch(base), 2L, path, "doc_id", 16)
       processVersionedBatch(v1Batch(base), 1L, path, "doc_id", 16)
-      val nCommits = s.read.parquet(s"$path/_manifest")
+      val nCommits = Lakehouse.readManifest(s, path)
         .select(col("version")).distinct().count()
       (0L to 2L).map { v =>
         Lakehouse.storeManifest(Lakehouse.readVersioned(s, path, v),

@@ -15,7 +15,14 @@ object StandingTable {
     * CREATE an orphaned warehouse dir (left by another JVM, or by a
     * crash before the catalog commit) is cleared: the session catalog
     * cannot reach it, so it carries no state a fold could merge, and
-    * left in place it would wedge saveAsTable forever. */
+    * left in place it would wedge saveAsTable forever.
+    *
+    * Reader staleness: the overwrite replaces the table's files from
+    * whichever session runs the fold (a running stream's cloned
+    * session, for the sinks). Another session that already resolved
+    * the table keeps the old file listing, and its next read fails
+    * with `FAILED_READ_FILE.FILE_NOT_EXIST` until it calls
+    * `spark.catalog.refreshTable(table)`. */
   def fold(spark: SparkSession, table: String)(
       step: Option[DataFrame] => Option[DataFrame]): Unit = {
     val exists = spark.catalog.tableExists(table)

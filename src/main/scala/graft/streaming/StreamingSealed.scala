@@ -2,7 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.{Lakehouse, Sft}
+import graft.sources.ParquetFooter
 
 /** Streaming SEALED-CONVERSATION export: the q366 watermark invariant
   * composed with the q367 phased byte-append, as a foreachBatch sink.
@@ -172,6 +174,10 @@ object StreamingSealed {
                            keep: Option[Long]): Unit =
     GenState.gcDirGens(fs, root, "_active", keep)
 
+  /** The `_active/b<gen>` layout [[processSealedTail]] writes. */
+  private val ActiveSchema = StructType.fromDDL(
+    "user_id BIGINT, last_t BIGINT")
+
   /** The ledgered active-user rows (user_id, last_t) — gap-window
     * bounded. Empty before the first commit. */
   private def readActive(spark: org.apache.spark.sql.SparkSession,
@@ -179,7 +185,8 @@ object StreamingSealed {
                          st: State): DataFrame =
     st.activeGen.filter(g => fs.exists(
         new org.apache.hadoop.fs.Path(activeDir(root, g)))) match {
-      case Some(g) => spark.read.parquet(activeDir(root, g))
+      case Some(g) =>
+        ParquetFooter.read(spark, Seq(activeDir(root, g)), Some(ActiveSchema))
       case None => spark.range(0)
         .select(col("id").as("user_id"), col("id").as("last_t"))
     }
@@ -347,7 +354,7 @@ object StreamingSealed {
           val candDf = spark.createDataFrame(
             mrows.toSeq.map(u => Tuple1(u._1))).toDF("user_id")
           val raw = Sft.rawTurns(
-              spark.read.parquet(sel.map(e => s"$root/${e.path}"): _*)
+              ParquetFooter.read(spark, sel.map(e => s"$root/${e.path}"))
                 .join(broadcast(candDf), Seq("user_id"), "left_semi")
                 .drop("bid", "ub"))
             .localCheckpoint(true)
@@ -445,7 +452,7 @@ object StreamingSealed {
         .filter(_.startsWith("g")).map(_.stripPrefix("g").toLong).toSeq
     val gen = (ledgeredGens ++ diskGens).maxOption.getOrElse(0L) + 1
     val genDir = s"$root/_events_c/g$gen"
-    spark.read.parquet(st.events.map(e => s"$root/${e.path}"): _*)
+    ParquetFooter.read(spark, st.events.map(e => s"$root/${e.path}"))
       .drop("bid", "ub")
       .repartitionByRange(nSegments, col("user_id"))
       .sortWithinPartitions(col("user_id"))
@@ -453,7 +460,7 @@ object StreamingSealed {
     // exact per-file ranges from the written segments: one pruned
     // read of the user_id column alone. Segment files live flat in
     // the generation dir, so the file NAME is the relative path.
-    val segFiles = spark.read.parquet(genDir)
+    val segFiles = ParquetFooter.read(spark, Seq(genDir))
       .groupBy(input_file_name().as("f"))
       .agg(min(col("user_id")).as("mn"), max(col("user_id")).as("mx"))
       .collect().toSeq.map { r =>

@@ -122,6 +122,50 @@ class SketchSpec extends AnyFunSuite with TempDirs {
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
+  test("streaming KMV sink, real restart: a redelivered batch id " +
+    "folds to the same table (idempotent merge, no ledger)") {
+    import graft.streaming.{ForeachBatchSink, StreamingSketch}
+    val k = 8
+    val table = "kmv_restart_spec"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val rows = (0 until 60).map(i => (s"s${i % 3}", s"w${i % 23} w${i % 11}"))
+    val base = tempDir("kmv_restart")
+    def land(g: Seq[(String, String)]): Unit =
+      g.toDF("source", "text").coalesce(1).write.mode("append")
+        .parquet(s"$base/src")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def start() = ForeachBatchSink.start(
+        spark.readStream.schema("source STRING, text STRING")
+          .parquet(s"$base/src"), s"$base/ckpt") { (batch, batchId) =>
+      seen += batchId
+      StreamingSketch.processBatch(batch, "source", "text", k, table)
+    }
+    land(rows.take(20))
+    val q = start()
+    q.processAllAvailable()
+    rows.drop(20).grouped(20).foreach { g => land(g); q.processAllAvailable() }
+    q.stop()
+    assert(seen == Seq(0L, 1L, 2L))
+    def state() = spark.table(table)
+      .as[(String, Seq[Long])].collect().toMap
+    val batchTwin = Sketches.kMinPerKey(
+      rows.toDF("source", "text")
+        .select(col("source"), explode(split(col("text"), " ")).as("w"))
+        .select(col("source"), Sketches.hash48(col("w")).as("h")),
+      "source", "h", k).as[(String, Seq[Long])].collect().toMap
+    assert(state() == batchTwin)
+    // crash after batch 2 folded but before Spark recorded it done:
+    // the restart redelivers batch 2 under id 2, and the set-union
+    // merge folds it into the table it already shaped
+    prune(s"$base/ckpt", "commits", _ != "2")
+    seen.clear()
+    val q2 = start(); q2.processAllAvailable(); q2.stop()
+    assert(seen == Seq(2L), "the restart must redeliver batch 2")
+    spark.catalog.refreshTable(table)
+    assert(state() == batchTwin)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
   test("streaming CMS sink: stream == batch, replayed batch id skipped " +
     "by the in-table ledger — and WITHOUT the ledger it double-counts " +
     "(the negative control proving the ledger is load-bearing)") {

@@ -75,6 +75,18 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(unmarked.isEmpty, s"queries not marked `writes`: ${unmarked.mkString("; ")}")
   }
 
+  test("Tables.t reads every table with spark.read.parquet's schema " +
+    "(footer-read on the driver; events under nanosAsLong)") {
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    Tables.all.foreach { t =>
+      val p = s"$sf/$t.parquet"
+      val plain = spark.read.parquet(p).schema
+      assert(graft.sources.ParquetFooter.read(spark, Seq(p)).schema == plain, t)
+      // only events then recasts ts to the epoch-nanos contract
+      if (t != "events") assert(Tables.t(spark, sf, t).schema == plain, t)
+    }
+  }
+
   test("q01 matches hand-computed group count") {
     val df = SparkEntry.queries("q01_pricing_summary")(spark, sf)
     assert(df.columns.toSet.contains("sum_qty"))
