@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import graft.sources.ParquetFooter
 
 /** Ingest-batch store with FILE-LEVEL COLUMN STATS — the Delta/
   * Iceberg data-skipping mechanic in plain parquet. Each ingest batch
@@ -52,6 +53,14 @@ object StatsStore {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The `_stats` layout: one row per (batch, bucket, stat column),
+    * the same for every writer here (ingest, compaction, expiry), so
+    * a read needs no schema inference. */
+  private val StatsSchema = StructType(
+    Seq("batch", "bucket").map(StructField(_, LongType)) ++
+      (StructField("col_name", StringType) +:
+        Seq("min_v", "max_v", "n_rows").map(StructField(_, LongType))))
+
   private def statLong(df: DataFrame, c: String): Column =
     df.schema(c).dataType match {
       case TimestampType => unix_micros(col(c))
@@ -67,7 +76,7 @@ object StatsStore {
     val p = new org.apache.hadoop.fs.Path(path, "_schema")
     require(fsOf(spark, path).exists(p),
       s"store at $path has no live batches and no _schema sentinel")
-    spark.read.parquet(p.toString).filter(lit(false))
+    ParquetFooter.read(spark, Seq(p.toString)).filter(lit(false))
   }
 
   /** Write the `_schema` sentinel once (first ingest): an empty frame
@@ -106,7 +115,7 @@ object StatsStore {
     * opens `_stats`. */
   private def statsDf(spark: SparkSession, path: String): DataFrame = {
     recoverStats(spark, path)
-    spark.read.parquet(s"$path/_stats")
+    ParquetFooter.read(spark, Seq(s"$path/_stats"), fixed = Some(StatsSchema))
   }
 
   private def statsBatches(spark: SparkSession,

@@ -1,7 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 import graft.functions.{JObj, JStr}
 
 /** Directory-scale ingest for the text-export instrument formats
@@ -11,16 +16,19 @@ import graft.functions.{JObj, JStr}
   *
   * Shape: the driver lists paths and parses ONLY the head file to pin
   * the output schema (exactly the single-file loader's inference, so
-  * the two paths agree); executors then read + parse whole files —
-  * each file is one task, the natural unit for KB–MB instrument
-  * exports — and emit typed rows tagged with `source_file`. Files
-  * whose header differs are reconciled BY COLUMN NAME against the
-  * pinned schema (missing column → null, extra column → dropped), so
-  * the two STA export variants land in one frame.
+  * the two paths agree, and like it without a Spark job); executors
+  * then read + parse whole files and emit typed rows tagged with
+  * `source_file`. Files are packed into tasks by the rule a Parquet or
+  * CSV scan splits its files by ([[pack]]): a few KB-sized exports
+  * share one task, a large fleet spreads over the cluster, and no
+  * shuffle runs. Files whose header differs are reconciled BY COLUMN
+  * NAME against the pinned schema (missing column → null, extra
+  * column → dropped), so the two STA export variants land in one frame.
   *
-  * I/O goes through the Hadoop FileSystem API, so `dir` may live on
-  * any configured filesystem (local, HDFS, S3A), and bytes are read
-  * inside tasks — the driver never holds file contents. Per-file
+  * I/O goes through the Hadoop FileSystem API under the session's
+  * Hadoop conf (shipped to the tasks once per load), so `dir` may live
+  * on any filesystem the session can list (local, HDFS, S3A), and bytes
+  * are read inside tasks — the driver never holds file contents. Per-file
   * table metadata is a separate one-row-per-file frame
   * ([[metadataTable]]) rather than a per-row duplicate.
   */
@@ -60,17 +68,14 @@ object LabDirectory {
       fixedSchema = if (union) Some(surveySchema(spark, dir, glob, FtirSource.parseRows))
       else None)
 
-  /** Distributed schema survey: every file parsed in its own task,
+  /** Distributed schema survey: every file parsed in a task,
     * schemas unioned in first-seen column order. Shared column names
     * must agree on type (it is an error otherwise — that is two
     * instrument families in one directory). */
   def surveySchema(spark: SparkSession, dir: String, glob: String,
                    parser: RowParser): StructType = {
-    val paths = list(spark, dir, glob)
-    require(paths.nonEmpty, s"no files matching $glob under $dir")
-    val ddls = spark.createDataset(paths)(Encoders.STRING)
-      .repartition(taskCount(spark, paths.size)) // round-robin files over tasks
-      .map { p: String => parser(p, readBytesTask(p)).schema.json }(Encoders.STRING)
+    val ddls = fleet(spark, dir, glob).bytes
+      .map { case (p, bytes) => parser(p, bytes).schema.json }
       .collect()
     val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
     ddls.map(j => DataType.fromJson(j).asInstanceOf[StructType]).foreach(_.fields.foreach { f =>
@@ -109,78 +114,63 @@ object LabDirectory {
     metadataTable(spark, dir, glob,
       (p, b) => ConeSource.parseRows(p, b).tableMeta)
 
-  /** Task count for a fleet of n files: one file per task up to 8×
-    * the cluster's parallelism, then multiple files per task — a
-    * million KB-sized files should not schedule a million tasks. */
-  private def taskCount(spark: SparkSession, nFiles: Int): Int =
-    math.min(nFiles, 8 * spark.sparkContext.defaultParallelism)
-
   /** Distributed body ingest: schema = `source_file` + the head
-    * file's single-file-loader schema; one executor task per file
-    * (bounded by [[taskCount]] for very large fleets). */
+    * file's single-file-loader schema; files packed into tasks by
+    * [[pack]]. */
   def load(spark: SparkSession, dir: String, glob: String,
            parser: Parser): DataFrame = {
-    val paths = list(spark, dir, glob)
-    require(paths.nonEmpty, s"no files matching $glob under $dir")
-    val head = parser(paths.head, readBytes(spark, paths.head))
+    val files = fleet(spark, dir, glob)
+    val head = parser(files.head, readBytes(files.conf, files.head))
     // Pin types with the same CSV inference the single-file path uses.
-    val headDf = LabTable.csvBody(spark, head.body, head.delim, head.cols)
+    val types = LabTable.csvTypes(spark, head.body, head.delim)
+    require(types.size == head.cols.size, s"${files.head}: " +
+      s"${head.cols.size} header columns, ${types.size} in the first body line")
+    val targets = head.cols.zip(types)
     val schema = StructType(
       StructField("source_file", StringType, nullable = false) +:
-        headDf.schema.fields.toSeq)
-    val targets: Seq[(String, DataType)] =
-      headDf.schema.fields.toSeq.map(f => (f.name, f.dataType))
-    val rows = spark.createDataset(paths)(Encoders.STRING)
-      .repartition(taskCount(spark, paths.size)) // round-robin files over tasks
-      .mapPartitions { it: Iterator[String] =>
-        it.flatMap { p =>
-          val parsed = parser(p, readBytesTask(p))
-          val srcIdx = targets.map { case (name, dt) =>
-            (parsed.cols.indexOf(name), dt)
-          }
-          parsed.body.iterator.map { line =>
-            val fields = line.split(parsed.delim.toString, -1)
-            Row.fromSeq(p +: srcIdx.map { case (i, dt) =>
-              if (i < 0 || i >= fields.length) null
-              else convert(fields(i).trim, dt)
-            })
-          }
-        }
-      }(Encoders.row(schema))
-    LabTable.withUnits(rows.toDF(),
-      head.cols.zip(head.units).map { case (c, u) => (c, u) })
+        targets.map { case (c, t) => StructField(c, t) })
+    val rows = files.bytes.flatMap { case (p, bytes) =>
+      val parsed = parser(p, bytes)
+      val srcIdx = targets.map { case (name, dt) =>
+        (parsed.cols.indexOf(name), dt)
+      }
+      parsed.body.iterator.map { line =>
+        val fields = line.split(parsed.delim.toString, -1)
+        Row.fromSeq(p +: srcIdx.map { case (i, dt) =>
+          if (i < 0 || i >= fields.length) null
+          else convert(fields(i).trim, dt)
+        })
+      }
+    }
+    LabTable.withUnits(spark.createDataFrame(rows, schema),
+      head.cols.zip(head.units))
   }
 
   /** Distributed typed-rows ingest (formats whose parsers emit typed
     * rows directly): schema = `source_file` + the head file's schema
     * (or `fixedSchema`, e.g. a static union of known variants);
-    * reconciliation is by column name, one executor task per file.
-    * Files must agree on the TYPE of any shared column name (one
+    * reconciliation is by column name, files packed into tasks by
+    * [[pack]]. Files must agree on the TYPE of any shared column name (one
     * instrument family per load, like the single-file path). */
   def loadTyped(spark: SparkSession, dir: String, glob: String,
                 parser: RowParser,
                 fixedSchema: Option[StructType] = None): DataFrame = {
-    val paths = list(spark, dir, glob)
-    require(paths.nonEmpty, s"no files matching $glob under $dir")
-    val head = parser(paths.head, readBytes(spark, paths.head))
+    val files = fleet(spark, dir, glob)
+    val head = parser(files.head, readBytes(files.conf, files.head))
     val target = fixedSchema.getOrElse(head.schema)
     val schema = StructType(
       StructField("source_file", StringType, nullable = false) +:
         target.fields.toSeq)
     val targetNames = target.fieldNames.toSeq
-    val rows = spark.createDataset(paths)(Encoders.STRING)
-      .repartition(taskCount(spark, paths.size)) // round-robin files over tasks
-      .mapPartitions { it: Iterator[String] =>
-        it.flatMap { p =>
-          val parsed = parser(p, readBytesTask(p))
-          val idx = targetNames.map(n => parsed.schema.fieldNames.indexOf(n))
-          parsed.rows.iterator.map { r =>
-            Row.fromSeq(p +: idx.map(i => if (i < 0) null else r.get(i)))
-          }
-        }
-      }(Encoders.row(schema))
+    val rows = spark.createDataFrame(files.bytes.flatMap { case (p, bytes) =>
+      val parsed = parser(p, bytes)
+      val idx = targetNames.map(n => parsed.schema.fieldNames.indexOf(n))
+      parsed.rows.iterator.map { r =>
+        Row.fromSeq(p +: idx.map(i => if (i < 0) null else r.get(i)))
+      }
+    }, schema)
     val unitMeta = head.units
-    rows.toDF().select(rows.toDF().columns.map { c =>
+    rows.select(rows.columns.map { c =>
       unitMeta.get(c) match {
         case Some(u) => org.apache.spark.sql.functions.col(c)
           .as(c, new org.apache.spark.sql.types.MetadataBuilder()
@@ -195,24 +185,17 @@ object LabDirectory {
     * [[LabTable]], in queryable frame form. */
   def metadataTable(spark: SparkSession, dir: String, glob: String,
                     parser: (String, Array[Byte]) => JObj): DataFrame = {
-    val paths = list(spark, dir, glob)
-    require(paths.nonEmpty, s"no files matching $glob under $dir")
     val schema = StructType(Seq(
       StructField("source_file", StringType, nullable = false),
       StructField("type", StringType),
       StructField("file_metadata", StringType)))
-    spark.createDataset(paths)(Encoders.STRING)
-      .repartition(taskCount(spark, paths.size)) // round-robin files over tasks
-      .mapPartitions { it: Iterator[String] =>
-        it.map { p =>
-          val tableMeta = parser(p, readBytesTask(p))
-          val tpe = tableMeta.get("type")
-            .collect { case JStr(s) => s }.orNull
-          val fm = tableMeta.get("file_metadata").map(_.render).orNull
-          Row(p, tpe, fm)
-        }
-      }(Encoders.row(schema))
-      .toDF()
+    spark.createDataFrame(fleet(spark, dir, glob).bytes.map { case (p, bytes) =>
+      val tableMeta = parser(p, bytes)
+      val tpe = tableMeta.get("type")
+        .collect { case JStr(s) => s }.orNull
+      val fm = tableMeta.get("file_metadata").map(_.render).orNull
+      Row(p, tpe, fm)
+    }, schema)
   }
 
   /** Numeric conversion matching the pinned CSV-inferred schema;
@@ -224,38 +207,57 @@ object LabDirectory {
       case _ => s
     } catch { case _: NumberFormatException => null }
 
-  private def list(spark: SparkSession, dir: String, glob: String): Seq[String] = {
-    val hPath = new org.apache.hadoop.fs.Path(dir, glob)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val found = fs.globStatus(hPath)
-    if (found == null) Seq.empty
-    else found.toSeq.filter(_.isFile).map(_.getPath.toString).sorted
+  /** The files of one load: `head` (the first path, which pins the
+    * schema on the driver), the Hadoop `conf` they are listed and read
+    * under, and every matching file as (path, bytes), read in the tasks. */
+  private final case class Fleet(head: String, conf: Configuration,
+                                 bytes: RDD[(String, Array[Byte])])
+
+  /** The files matching `glob` under `dir`, in sorted path order,
+    * packed into tasks by [[pack]]. The session's Hadoop conf lists
+    * them on the driver and is broadcast once for the tasks' reads, so
+    * a filesystem the listing resolves is one the tasks resolve too. */
+  private def fleet(spark: SparkSession, dir: String, glob: String): Fleet = {
+    val conf = spark.sessionState.newHadoopConf()
+    val pattern = new Path(dir, glob)
+    val found = Option(pattern.getFileSystem(conf).globStatus(pattern))
+      .toSeq.flatten.filter(_.isFile).sortBy(_.getPath.toString)
+    require(found.nonEmpty, s"no files matching $glob under $dir")
+    val groups = pack(spark, found)
+    val shared = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    val bytes = spark.sparkContext.parallelize(groups, groups.size)
+      .flatMap(_.iterator.map(p => (p, readBytes(shared.value.value, p))))
+    Fleet(found.head.getPath.toString, conf, bytes)
   }
 
-  private def readBytes(spark: SparkSession, path: String): Array[Byte] = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readAll(fs, hPath)
+  /** Spark's file-split rule, as a Parquet or CSV scan applies it:
+    * the split size from `spark.sql.files.maxPartitionBytes`,
+    * `spark.sql.files.openCostInBytes` and the session's parallelism
+    * ([[FilePartition.maxSplitBytes]]), then next-fit packing where
+    * each file costs its length plus the open cost. Whole files only
+    * (an export parses as a unit); path order is kept within and
+    * across tasks. */
+  private def pack(spark: SparkSession, files: Seq[FileStatus]): Seq[Seq[String]] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      files.map(_.getLen + openCost).sum)
+    val groups = Seq.newBuilder[Seq[String]]
+    val current = scala.collection.mutable.ArrayBuffer.empty[String]
+    var size = 0L
+    files.foreach { f =>
+      if (current.nonEmpty && size + f.getLen > maxSplit) {
+        groups += current.toSeq; current.clear(); size = 0L
+      }
+      size += f.getLen + openCost
+      current += f.getPath.toString
+    }
+    (groups += current.toSeq).result()
   }
 
-  /** Executor-side read: tasks build a default Hadoop conf (picks up
-    * core-site.xml on the executor classpath — the standard cluster
-    * distribution mechanism for FS credentials). */
-  private def readBytesTask(path: String): Array[Byte] = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    readAll(fs, hPath)
-  }
-
-  private def readAll(fs: org.apache.hadoop.fs.FileSystem,
-                      p: org.apache.hadoop.fs.Path): Array[Byte] = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
+  private def readBytes(conf: Configuration, path: String): Array[Byte] = {
+    val hPath = new Path(path)
+    val in = hPath.getFileSystem(conf).open(hPath)
+    try in.readAllBytes()
+    finally in.close()
   }
 }

@@ -1,8 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVInferSchema, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{IntegerType, MetadataBuilder}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, MetadataBuilder, NullType, StructType}
 import graft.functions.{JObj, JStr, JVal}
 
 /** The engine's fundamental abstraction (SURVEY.md §1.1): a DataFrame
@@ -33,12 +40,13 @@ case class LabTable(df: DataFrame, tableMeta: JObj) {
     * sees identical JSON) and a `_lab_metadata.json` sidecar (useful
     * for humans and directory listings). */
   def write(path: String): Unit = {
+    val dir = LabTable.localDir(df.sparkSession, path)
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
     val footerEntries =
       fileMetadata.map(m => "file_metadata" -> m.render).toSeq ++
         typeTag.map(t => "type" -> t).toSeq
     if (footerEntries.nonEmpty) {
-      val parts = new java.io.File(path).listFiles()
+      val parts = dir.listFiles()
       if (parts != null)
         parts.filter(f => f.isFile && f.getName.endsWith(".parquet"))
           .foreach { f =>
@@ -53,18 +61,32 @@ case class LabTable(df: DataFrame, tableMeta: JObj) {
       df.sparkSession.catalog.refreshByPath(path)
     }
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_lab_metadata.json"), tableMeta.render)
+      new java.io.File(dir, "_lab_metadata.json").toPath, tableMeta.render)
   }
 }
 
 object LabTable {
 
+  /** The local directory behind `path`, a plain path or a `file:` URI:
+    * the footer surgery and the sidecar edit local files, so a path on
+    * another filesystem fails here, before anything is written. */
+  private def localDir(spark: SparkSession, path: String): java.io.File = {
+    val uri = new Path(path).toUri
+    val scheme = Option(uri.getScheme).getOrElse(
+      FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    require(scheme == "file", s"LabTable: $path is not on the local " +
+      s"filesystem (scheme '$scheme'); its footer metadata and " +
+      "_lab_metadata.json sidecar need a local path or a file: URI")
+    new java.io.File(uri.getPath)
+  }
+
   def read(spark: SparkSession, path: String): LabTable = {
+    val dir = localDir(spark, path)
     val df = spark.read.parquet(path)
     // Footer keys first (present in our output AND the reference's
     // pyarrow-written files); sidecar as fallback.
     val fromFooter: Option[JObj] = {
-      val parts = new java.io.File(path).listFiles()
+      val parts = dir.listFiles()
       val part = Option(parts).toSeq.flatten
         .find(f => f.isFile && f.getName.endsWith(".parquet"))
       part.flatMap { f =>
@@ -75,7 +97,7 @@ object LabTable {
           kv.get("type").map(s => "type" -> (JStr(s): JVal)))
       }
     }
-    val sidecar = java.nio.file.Paths.get(path, "_lab_metadata.json")
+    val sidecar = new java.io.File(dir, "_lab_metadata.json").toPath
     val meta = fromFooter.getOrElse {
       if (java.nio.file.Files.exists(sidecar))
         PyJsonParser.parse(java.nio.file.Files.readString(sidecar)) match {
@@ -106,28 +128,62 @@ object LabTable {
     }.toSeq: _*)
   }
 
-  /** Parse delimiter-separated body lines into a typed DataFrame:
-    * distributed CSV parse + schema inference over a Dataset[String]
-    * (the driver only holds the small raw lines of one instrument
-    * file; a directory-of-files scale path would hand the same
-    * parse to binaryFile + flatMap). Integral columns are widened to
-    * long — the reference's Arrow inference emits int64. */
+  /** Parse delimiter-separated body lines into a typed DataFrame on
+    * the driver, without a Spark job: the lines of one instrument file
+    * are already in hand. Types and values are what
+    * `spark.read.option("inferSchema", "true").csv(lines)` gives, from
+    * the same Spark code with the same options (`CSVInferSchema` over
+    * univocity tokens for the types, `UnivocityParser` for the values,
+    * PERMISSIVE: a short row pads with nulls, a long one is cut).
+    * Integral columns are widened to long — the reference's Arrow
+    * inference emits int64. */
   def csvBody(spark: SparkSession, lines: Seq[String], delim: Char,
               cols: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val ds = spark.createDataset(lines)
-    val df = spark.read
-      .option("delimiter", delim.toString)
-      .option("inferSchema", "true")
-      .option("ignoreLeadingWhiteSpace", "true")
-      .option("ignoreTrailingWhiteSpace", "true")
-      .csv(ds)
-      .toDF(cols: _*)
-    df.select(df.schema.fields.map { f =>
-      f.dataType match {
-        case IntegerType => col(f.name).cast("long").as(f.name)
-        case _ => col(f.name)
+    val (options, body, schema) = inferCsv(spark, lines, delim)
+    val rows = SQLConf.withExistingConf(spark.sessionState.conf) {
+      val parser = new UnivocityParser(schema, options)
+      val safe = new FailureSafeParser[String](parser.parse(_),
+        options.parseMode, schema, options.columnNameOfCorruptRecord)
+      body.flatMap(line => safe.parse(line).map(_.copy())) // parser reuses its row
+    }
+    GraftSqlBridge.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows)).toDF(cols: _*)
+  }
+
+  /** The column types [[csvBody]] gives `lines`, in order, without
+    * parsing the values. */
+  private[sources] def csvTypes(spark: SparkSession, lines: Seq[String],
+                                delim: Char): Seq[DataType] =
+    inferCsv(spark, lines, delim)._3.map(_.dataType)
+
+  /** The reader's options, the lines it parses and the schema it infers
+    * (columns `_c0`…, as wide as the first line, integers widened). */
+  private def inferCsv(spark: SparkSession, lines: Seq[String], delim: Char)
+      : (CSVOptions, Seq[String], StructType) = {
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(Map(
+      "delimiter" -> delim.toString,
+      "inferSchema" -> "true",
+      "ignoreLeadingWhiteSpace" -> "true",
+      "ignoreTrailingWhiteSpace" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    // the reader drops blank lines with SQL `trim` (spaces only) before
+    // parsing; inference filters its tokens with Java's trim
+    val body = lines.filter(_.exists(_ != ' '))
+    val schema = SQLConf.withExistingConf(conf) {
+      body.headOption.fold(new StructType()) { first =>
+        val tokenizer = new CsvParser(options.asParserSettings)
+        val width = tokenizer.parseLine(first).length
+        val infer = new CSVInferSchema(options)
+        val types = CSVExprUtils.filterCommentAndEmpty(body.iterator, options)
+          .foldLeft(Array.fill[DataType](width)(NullType)) { (soFar, line) =>
+            infer.inferRowType(soFar, tokenizer.parseLine(line))
+          }
+        StructType(infer.toStructFields(
+          types.map { case IntegerType => LongType; case t => t },
+          Array.tabulate(width)(i => s"_c$i")))
       }
-    }.toSeq: _*)
+    }
+    (options, body, schema)
   }
 }

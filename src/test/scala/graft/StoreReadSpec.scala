@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Lakehouse
+import graft.operators.{Lakehouse, StatsStore}
 import graft.sources.ParquetFooter
 import graft.streaming.StreamingSealed
 
@@ -20,26 +20,8 @@ class StoreReadSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** The jobs `f` starts. Tests run sequentially in the forked JVM, so
-    * the listener sees only `f`'s jobs once the bus is drained before
-    * and after. */
-  private def jobsDuring[T](f: => T): (T, Seq[Job]) = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.add(Job(js.stageInfos.map(_.name),
-          Option(js.properties)
-            .exists(_.getProperty("spark.sql.execution.id") != null)))
-    }
-    org.apache.spark.sql.GraftSqlBridge.waitListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = f
-      org.apache.spark.sql.GraftSqlBridge.waitListeners(spark)
-      import scala.jdk.CollectionConverters._
-      (out, jobs.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsDuring[T](f: => T): (T, Seq[Job]) =
+    StoreReadSpec.jobsDuring(spark)(f)
 
   private def docs(ids: Seq[Long]) =
     ids.map(i => (i, s"text $i", "en", 10L + i))
@@ -156,9 +138,51 @@ class StoreReadSpec extends AnyFunSuite with TempDirs {
     // so only the read-only ops can pin the name outright
     Seq(lookup, read, vacuum).foreach(js => assert(!js.exists(_.parquetAt), js))
   }
+
+  test("stats-store reads: _stats and the _schema sentinel equal " +
+    "spark.read.parquet's schema, and a range lookup or a drained " +
+    "store's read starts no job outside a query") {
+    val path = freshDir("graft_statread")
+    val rows = (0L until 40L).map(i => (i, i * 10L, s"r$i")).toDF("id", "v", "s")
+    StatsStore.appendBatch(rows.filter($"id" < 20L), "id", path, 4, 0L, Seq("v"))
+    StatsStore.appendBatch(rows.filter($"id" >= 20L), "id", path, 4, 1L, Seq("v"))
+    for (dir <- Seq("_stats", "_schema"))
+      assert(footer(s"$path/$dir") == plain(s"$path/$dir"), dir)
+    val (hit, range) = jobsDuring(StatsStore.rangeBatches(spark, path, "v", 250L, 260L))
+    assert(hit == Seq(1L))
+    StatsStore.expireBatches(spark, path, "v", Long.MaxValue)
+    val (drained, empty) = jobsDuring(StatsStore.readStore(spark, path))
+    assert(drained.schema == plain(s"$path/_schema") && drained.count() == 0L)
+    Seq("rangeBatches" -> range, "drained readStore" -> empty).foreach {
+      case (op, jobs) =>
+        assert(jobs.forall(_.sql), s"$op ran a job outside any query: $jobs")
+        assert(!jobs.exists(_.parquetAt), s"$op: $jobs")
+    }
+  }
 }
 
 object StoreReadSpec {
+  /** The jobs `f` starts. Tests run sequentially in the forked JVM, so
+    * the listener sees only `f`'s jobs once the bus is drained before
+    * and after. */
+  def jobsDuring[T](spark: SparkSession)(f: => T): (T, Seq[Job]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add(Job(js.stageInfos.map(_.name),
+          Option(js.properties)
+            .exists(_.getProperty("spark.sql.execution.id") != null)))
+    }
+    org.apache.spark.sql.GraftSqlBridge.waitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.sql.GraftSqlBridge.waitListeners(spark)
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** One started job: the names of its stages, and whether it ran
     * inside a SQL execution. Every action a query runs does; a
     * schema-inference or parallel-listing job, started while a read
